@@ -26,35 +26,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pulsar_elasticsearch_sync_rs_spark.sources.batch import parquet_schema
+
 # scd2_apply_partitioned's write-riding census uses one conditional
 # count per touched bucket; above this many touched buckets it falls
 # back to the one-job groupBy collect instead of building an
 # expression per bucket
 _CENSUS_OBS_MAX_BUCKETS = 128
 
-# per-process schema cache for the at-rest SCD2 base: every bare
-# spark.read.parquet pays a 1-task distributed schema-inference job,
-# and the partitioned merge read base_dir TWICE per micro-batch (key
-# dtype probe + the pruned data read) — two jobs per batch in a
-# job-count-bound hot path (optimization round 16; the
-# sources/batch.read_table finding applied to the CDC side). The merge
-# itself rewrites partitions with the identical schema, so within one
-# application the schema is stable; keyed on (application id, path) so
-# session cycles in tests never see a stale entry.
-_BASE_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
-
-
-def _base_schema(spark, base_dir: str):
-    key = (spark.sparkContext.applicationId, base_dir)
-    schema = _BASE_SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(base_dir).schema
-        _BASE_SCHEMA_CACHE[key] = schema
-    return schema
-
-
 def _read_base(spark, base_dir: str) -> DataFrame:
-    return spark.read.schema(_base_schema(spark, base_dir)).parquet(base_dir)
+    # the merge rewrites partitions with the identical schema, so the
+    # base schema is stable for the application: no per-batch
+    # inference job
+    return spark.read.schema(parquet_schema(spark, base_dir)).parquet(base_dir)
 
 
 def scd2_apply(
@@ -564,9 +548,7 @@ def scd2_apply_partitioned(
     # schema from the per-process cache (one inference job per
     # application, not two per batch); the base key dtype is the
     # canonical one — pb on disk was computed from it
-    base_key_type = {
-        f.name: f.dataType for f in _base_schema(spark, base_dir)
-    }[key]
+    base_key_type = parquet_schema(spark, base_dir)[key].dataType
     changes = changes.withColumn(key, F.col(key).cast(base_key_type))
     pb = F.pmod(F.xxhash64(F.col(key)), F.lit(n_parts)).cast("int")
     buckets = [

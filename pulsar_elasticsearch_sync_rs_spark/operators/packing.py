@@ -68,68 +68,61 @@ def exclusive_prefix_sum(
     before this one in ``order_col`` order (distributed two-phase scan;
     see module docstring). ``order_col`` must be unique.
 
-    ``assume_range_partitioned`` (optimization round 15): the caller
-    vouches ``df`` is ALREADY physically range-partitioned by
-    ``order_col`` with job-stable partitions — i.e. it derives NARROWLY
-    (filters / projections / broadcast joins only) from an eager
-    ``localCheckpoint`` that was written ``repartitionByRange
-    (order_col)``. The operator then skips its own range exchange AND
-    the defensive checkpoint: partition ids are read straight off the
-    frozen physical partitioning (any subset of a range partition stays
-    inside its range, so filters upstream cannot break the cross-
-    partition order), the totals pass aggregates WITHOUT the window,
-    and the per-partition running sum executes once inside whatever
-    action consumes the result. q_llm_pipeline fuses its survivor-keys
-    checkpoint this way — one full exchange plus one materialization of
-    the 16 B/doc stream deleted per pipeline run."""
-    import os as _os
-
+    ``assume_range_partitioned``: the caller vouches ``df`` is ALREADY
+    physically range-partitioned by ``order_col`` with job-stable
+    partitions — i.e. it derives NARROWLY (filters / projections /
+    broadcast joins only) from an eager ``localCheckpoint`` that was
+    written ``repartitionByRange(order_col)``. The operator then skips
+    its own range exchange AND the defensive checkpoint: partition ids
+    are read straight off the frozen physical partitioning (any subset
+    of a range partition stays inside its range, so filters upstream
+    cannot break the cross-partition order), the totals pass aggregates
+    the raw stream, and the per-partition running sum executes once
+    inside whatever action consumes the result. q_llm_pipeline fuses
+    its survivor-keys checkpoint this way — one full exchange plus one
+    materialization of the 16 B/doc stream deleted per pipeline run.
+    On this path a tied ``order_col`` raises ``ValueError`` when the
+    result is evaluated (checked inside the scan, no extra job)."""
     spark = df.sparkSession
     if assume_range_partitioned:
         part = df.withColumn("__pid", F.spark_partition_id())
         totals_src = part
-        if _os.environ.get("SPARK_GRAFT_PREFIX", "arrow") == "arrow":
-            # ZERO-SHUFFLE local scan (optimization round 16): the
-            # window below needs Exchange(hashpartitioning(__pid)) —
-            # Catalyst cannot see the rows are already physically
-            # grouped by their own partition id, so the whole skinny
-            # stream re-shuffles once per pack. A per-partition Arrow
-            # cumsum computes the identical exclusive sums with NO
-            # exchange: sortWithinPartitions (no data movement) + one
-            # mapInPandas pass whose running total carries across the
-            # partition's batches. Values exact (int64 cumsum);
-            # SPARK_GRAFT_PREFIX=window keeps the JVM window shape
-            # reachable for interleaved A/B re-measures.
-            sorted_part = part.sortWithinPartitions(order_col)
-            out_fields = sorted_part.schema.fields
-            out_schema = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in out_fields
-            ) + ", __local_excl bigint"
-            vcol = val_col
+        # ZERO-SHUFFLE local scan: a window partitioned by __pid would
+        # need Exchange(hashpartitioning(__pid)) — Catalyst cannot see
+        # the rows are already physically grouped by their own
+        # partition id. sortWithinPartitions (no data movement) + one
+        # mapInPandas pass whose running total carries across the
+        # partition's batches computes the identical exclusive sums.
+        # Values exact (int64 cumsum).
+        sorted_part = part.sortWithinPartitions(order_col)
+        out_schema = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}"
+            for f in sorted_part.schema.fields
+        ) + ", __local_excl bigint"
 
-            def _cum(batches):
-                run = 0
-                for pdf in batches:
-                    v = pdf[vcol].fillna(0).astype("int64")
-                    pdf = pdf.assign(
-                        __local_excl=(v.cumsum() - v + run).astype("int64")
-                    )
-                    run += int(v.sum())
-                    yield pdf
+        def _cum(batches):
+            run, last = 0, None
+            for pdf in batches:
+                keys = pdf[order_col].to_numpy()
+                # sorted within the partition, so a non-increasing step
+                # (inside the batch or across its boundary) is a tie
+                if len(keys):
+                    if (keys[1:] <= keys[:-1]).any() or (
+                        last is not None and keys[0] <= last
+                    ):
+                        raise ValueError(
+                            f"exclusive_prefix_sum: {order_col!r} must be "
+                            "unique, found a tied key"
+                        )
+                    last = keys[-1]
+                v = pdf[val_col].fillna(0).astype("int64")
+                pdf = pdf.assign(
+                    __local_excl=(v.cumsum() - v + run).astype("int64")
+                )
+                run += int(v.sum())
+                yield pdf
 
-            local = sorted_part.mapInPandas(_cum, out_schema)
-        else:
-            w = Window.partitionBy("__pid").orderBy(order_col)
-            local = part.withColumn(
-                "__local_excl",
-                F.coalesce(
-                    F.sum(val_col).over(
-                        w.rowsBetween(Window.unboundedPreceding, -1)
-                    ),
-                    F.lit(0).cast("bigint"),
-                ),
-            )
+        local = sorted_part.mapInPandas(_cum, out_schema)
     else:
         n_part = num_partitions or int(
             spark.conf.get("spark.sql.shuffle.partitions", "32")
@@ -148,7 +141,6 @@ def exclusive_prefix_sum(
         part = df.repartitionByRange(n_part, order_col).withColumn(
             "__pid", F.spark_partition_id()
         )
-        totals_src = None  # set below, AFTER the checkpoint
         w = Window.partitionBy("__pid").orderBy(order_col)
         local = part.withColumn(
             "__local_excl",
@@ -159,7 +151,6 @@ def exclusive_prefix_sum(
                 F.lit(0).cast("bigint"),
             ),
         )
-    if not assume_range_partitioned:
         # Pin ONE physical partitioning: the totals job below and every
         # later action on the returned DataFrame must see the SAME range
         # boundaries, but repartitionByRange's sampler is re-seeded per

@@ -1844,26 +1844,11 @@ def q_llm_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash placement on doc_id keeps every downstream semi-join key
     # co-partitioned and is a no-op at production file counts
     docs = spread_scan(read_table(spark, sf_dir, "documents"), "doc_id")
-    # Gate stays in EXPRESSION form — a deliberate, measured choice
-    # (round-13 sf100 A/B, SCALE.md): the one-pass Arrow signals twin
-    # (text_signals_fast) wins at micro-batch grain (streaming
-    # curation +69%) and at sf0.1 (4.5 vs 5.2 s), but LOSES 1.5× at
-    # the 5M-doc decade (308.5 vs 208.9 s) — the gate subtree is
-    # re-evaluated by the decontaminate gram side and the keys build,
-    # and each Arrow re-evaluation re-crosses the full text column,
-    # while the interpreted chains re-run JVM-side off the live scan.
-    # Materializing the gated frame once (localCheckpoint) narrowed
-    # Arrow to 231 s but HOF+checkpoint read 329 s — the text-sized
-    # checkpoint write costs more than repeated JVM gate evals save.
-    # Round-14 closed the fifth shape the r13 A/B skipped: a SKINNY
-    # survivor-id checkpoint (~8 B/doc, never text) + broadcast LEFT
-    # SEMI, so the gate evaluates once and consumers probe a hash set.
-    # Measured at sf100: 226.8 s vs 217.6 s expression — on a QUIETER
-    # host (matmul 0.25 vs 0.43) — the ~2M-id broadcast build repeated
-    # per consumer costs more than the ~30 core-s JVM gate re-evals it
-    # replaces. All five shapes are now measured; expression stays.
-    # The probe shape remains reachable (SPARK_GRAFT_PIPELINE_GATE=
-    # semi, tools/probe_gate_semi.py) for future-decade re-measures.
+    # Gate stays in EXPRESSION form: the Arrow signals twin, a
+    # materialized gated frame and a skinny survivor-id semi-join
+    # probe all lost to it at the 5M-doc decade (measurements in
+    # SCALE.md) — each consumer re-evaluating the JVM gate off the live
+    # scan is cheaper than re-crossing or re-broadcasting the corpus.
     _, dup_word_frac, top_bigram_frac = repetition_signals("text")
     # no_pushdown: Catalyst would otherwise split this conjunction and
     # push every term below the spread exchange onto the single-task
@@ -1879,23 +1864,7 @@ def q_llm_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (dup_word_frac <= 0.6)
         & (top_bigram_frac <= 0.1)
     )
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_PIPELINE_GATE", "expr") == "semi":
-        # FIFTH gate shape (round-14 probe): evaluate the gate ONCE
-        # into a SKINNY decision checkpoint (survivor doc_ids only,
-        # ~8 B/doc — never text) and LEFT SEMI the corpus against it
-        # broadcast-side, so downstream consumers re-read text off the
-        # live parquet scan but replace the regex/HOF gate expression
-        # with a broadcast-hash membership probe.
-        gate_ids = (
-            docs.filter(gate_pred)
-            .select("doc_id")
-            .localCheckpoint(eager=True)
-        )
-        gated = docs.join(F.broadcast(gate_ids), "doc_id", "left_semi")
-    else:
-        gated = docs.filter(gate_pred)
+    gated = docs.filter(gate_pred)
 
     # decontamination as a filter: benchmark docs out, gram-hit docs
     # out. The corpus gram side shingles ONLY gate survivors — hits for
@@ -1965,34 +1934,16 @@ def q_llm_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "lang", "n_toks")
     )
 
-    if _os.environ.get("SPARK_GRAFT_PIPELINE_PACK", "fused") == "legacy":
-        # pre-round-15-fusion shape, kept reachable for interleaved
-        # A/B re-measures (the SPARK_GRAFT_PIPELINE_GATE convention):
-        # hash-partitioned checkpoint + rates broadcast join + the
-        # packer's own range exchange and defensive checkpoint
-        surv_keys = surv_agg.localCheckpoint(eager=True)
-        rates = temperature_rates(
-            surv_keys.filter(F.col("lang").isNotNull()), "lang"
-        )
-        mixed = (
-            surv_keys.join(F.broadcast(rates), "lang")
-            .filter(mix_keep_predicate())
-            .filter(knuth_u32("doc_id", TRAIN_SPLIT_SALT) % F.lit(100) < 98)
-            .select("doc_id", "n_toks")
-        )
-        return pack_sequences_from_counts(mixed, seq_len=256)
-
-    # Optimization round 15 — fuse the survivor checkpoint with the
-    # packer's range partition: the checkpoint is written ALREADY
-    # range-partitioned by doc_id, so the prefix scan downstream needs
-    # NO exchange and NO second materialization of the 16 B/doc stream
-    # (exclusive_prefix_sum's assume_range_partitioned contract; every
-    # step between checkpoint and scan — map lookup, filters, project —
-    # is narrow, and a subset of a range partition stays in its range).
-    # The range sampler runs against the groupBy's shuffle output, so
-    # the expensive gate/decontaminate chain still executes exactly
-    # once (its shuffle files are reused across the sampling job and
-    # the checkpoint job).
+    # Fuse the survivor checkpoint with the packer's range partition:
+    # the checkpoint is written ALREADY range-partitioned by doc_id, so
+    # the prefix scan downstream needs NO exchange and NO second
+    # materialization of the 16 B/doc stream (exclusive_prefix_sum's
+    # assume_range_partitioned contract; every step between checkpoint
+    # and scan — map lookup, filters, project — is narrow, and a subset
+    # of a range partition stays in its range). The range sampler runs
+    # against the groupBy's shuffle output, so the expensive
+    # gate/decontaminate chain still executes exactly once (its shuffle
+    # files are reused across the sampling job and the checkpoint job).
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     surv_keys = surv_agg.repartitionByRange(n_part, "doc_id").localCheckpoint(
         eager=True

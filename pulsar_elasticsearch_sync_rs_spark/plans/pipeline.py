@@ -56,6 +56,7 @@ from pulsar_elasticsearch_sync_rs_spark.operators.filters import (
     filter_non_empty,
 )
 from pulsar_elasticsearch_sync_rs_spark.operators.rate_limit import rate_limit_per_second
+from pulsar_elasticsearch_sync_rs_spark.operators.skew import evaluate_once
 from pulsar_elasticsearch_sync_rs_spark.sources.batch import events_as_stream_records
 
 
@@ -87,37 +88,18 @@ def etl_transform(df: DataFrame, cfg: PipelineConfig, tiebreaker: str | None = "
     df = filter_namespace_regex(df, cfg.namespace_filter_patterns, "value", "topic_short")
     if cfg.inject_key:
         df = df.withColumn(cfg.injected_field, F.expr("uuid()"))
-    # PARSE ONCE (optimization round 15, second resume). The chain's
-    # known double from_json came from PushDownPredicate: it pushes the
-    # validity filter below this projection by RE-INLINING the parse
-    # into the filter condition (and, in spread callers, on below the
-    # exchange onto the single-task scan). Guarding the PROJECTION with
-    # a non-deterministic tautology makes the project
-    # non-pushable-through: the filter stays above it, references the
-    # `parsed` attribute, and the payload is parsed exactly once per
-    # row — for every consumer (validity, doc rebuild, app/time-key
-    # lookups), batch AND streaming. Values identical: the guard is
-    # always true, and NULL-parse rows drop exactly as before.
-    # Guard choice: must be non-deterministic (so the optimizer cannot
-    # reorder/duplicate), STREAMING-legal (monotonically_increasing_id
-    # is rejected by the UnsupportedOperationChecker), and
-    # FOLD-RESISTANT — Spark 4 range-folds a direct `rand() >= lit`
-    # comparison to true and strips the guard (measured); routing the
-    # draw through an Add defeats the fold. One RNG draw per row, noise
-    # next to the map parse it de-duplicates.
-    # `SPARK_GRAFT_ETL_PARSE=legacy` keeps the two-parse shape
-    # reachable for interleaved A/B re-measures (A/B + plan witness in
-    # OPTIMIZATION_r15.md). The guard itself is operators/skew
-    # .evaluate_once — ONE implementation of the fold-resistance trick,
-    # so a Spark upgrade that breaks it is fixed (and its plan pins
-    # re-verified) in one place (round-15 ADVICE).
-    import os as _os
-
-    from pulsar_elasticsearch_sync_rs_spark.operators.skew import evaluate_once
-
-    parse = F.from_json("value", "map<string,string>")
-    if _os.environ.get("SPARK_GRAFT_ETL_PARSE", "once") != "legacy":
-        parse = evaluate_once(parse)
+    # PARSE ONCE. PushDownPredicate would push the validity filter
+    # below this projection by RE-INLINING the parse into the filter
+    # condition (and, in spread callers, on below the exchange onto the
+    # single-task scan), parsing every payload twice. evaluate_once
+    # makes the projection non-pushable-through: the filter stays above
+    # it and references the `parsed` attribute, so the payload is
+    # parsed exactly once per row for every consumer (validity, doc
+    # rebuild, app/time-key lookups), batch AND streaming. Values are
+    # identical: the guard is always true, and NULL-parse rows drop
+    # exactly as before. The guard (and why it is streaming-legal and
+    # fold-resistant) lives in operators/skew.evaluate_once.
+    parse = evaluate_once(F.from_json("value", "map<string,string>"))
     df = df.withColumn("parsed", parse).filter(F.col("parsed").isNotNull())
     df = df.withColumn("doc", sanitize_keys(F.col("parsed")))
     # single-parse discipline: app/time-key read the parsed map instead

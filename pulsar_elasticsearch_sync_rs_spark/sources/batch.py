@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TENANT_NS = "persistent://public/default"
 
@@ -43,25 +44,31 @@ def normalize_events_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-# per-process parquet schema cache: every bare spark.read.parquet pays
-# a 1-task schema-inference JOB (distributed footer read) per call —
-# six of them in the 5-way star join, one in every lane, every rep
-# (optimization round 16, status-API job audit). The schema of a
-# fixture path never changes within a process, so infer once per
-# (app_id, path) and hand it back explicitly; keying on the
-# application id keeps a stale schema from leaking across the
-# stop/start session cycles the test suite runs.
-_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
+# The one per-process parquet schema cache. Every bare spark.read.parquet
+# pays a 1-task schema-inference JOB (distributed footer read) per
+# call; readers that re-read a path whose schema cannot change within
+# a process (fixture tables, the landed curation corpus, the at-rest
+# SCD2 base) infer once and hand the schema back explicitly. Listing
+# still re-runs per read — only the inference job is skipped. An entry
+# goes stale when the application does: keying on the application id
+# keeps a schema from leaking across stop/start session cycles.
+_SCHEMA_CACHE: dict[tuple[str, str], StructType] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """Schema of the parquet data at ``path``, inferred once per
+    (application id, path); read with
+    ``spark.read.schema(parquet_schema(spark, path)).parquet(path)``."""
+    key = (spark.sparkContext.applicationId, path)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        schema = _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
+    return schema
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
-    key = (spark.sparkContext.applicationId, path)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = schema
-    df = spark.read.schema(schema).parquet(path)
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_events_ts(df)
     return df

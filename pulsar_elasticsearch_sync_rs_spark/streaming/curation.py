@@ -66,21 +66,19 @@ from ..operators.decontaminate import (
     _guarded,
     bench_gram_set,
 )
+from ..sources.batch import parquet_schema
+
 
 def _run_overlapped(thunks) -> None:
     """Run independent per-batch actions CONCURRENTLY (guide §2.6 —
     overlap independent jobs so one write's straggler tail back-fills
-    with the next write's tasks), sequentially when there is only one
-    or when ``SPARK_GRAFT_CURATION_LAND=serial`` (the interleaved-A/B
-    escape hatch). Exceptions propagate exactly as the sequential
-    shape's would: the first failure raises out of the micro-batch
-    after every in-flight action has finished (no half-submitted work
-    left racing the foreachBatch replay)."""
-    if len(thunks) == 1 or os.environ.get(
-        "SPARK_GRAFT_CURATION_LAND", "parallel"
-    ) == "serial":
-        for t in thunks:
-            t()
+    with the next write's tasks), sequentially when there is only one.
+    Exceptions propagate exactly as the sequential shape's would: the
+    first failure raises out of the micro-batch after every in-flight
+    action has finished (no half-submitted work left racing the
+    foreachBatch replay)."""
+    if len(thunks) == 1:
+        thunks[0]()
         return
     from concurrent.futures import ThreadPoolExecutor
 
@@ -99,23 +97,11 @@ def _run_overlapped(thunks) -> None:
 # driver collect and the literal list Catalyst has to carry.
 _HIST_ISIN_MAX = 10_000
 
-# per-process schema cache for the landed-corpus history read: the
-# near-dup verify re-reads out_dir every batch and a bare
-# spark.read.parquet pays a 1-task schema-inference job per call
-# (optimization round 16 — the sources/batch.read_table finding). The
-# corpus schema is fixed for the stream's lifetime (every batch lands
-# the same admitted projection); keyed on (application id, path).
-# Listing still re-runs per batch — only the inference job is skipped.
-_HIST_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _read_history(spark, out_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, out_dir)
-    schema = _HIST_SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(out_dir).schema
-        _HIST_SCHEMA_CACHE[key] = schema
-    return spark.read.schema(schema).parquet(out_dir)
+    # the near-dup verify re-reads out_dir every batch; every batch
+    # lands the same admitted projection, so the corpus schema is fixed
+    # for the stream's lifetime: no per-batch inference job
+    return spark.read.schema(parquet_schema(spark, out_dir)).parquet(out_dir)
 
 
 def _sha_table_name(sha_dir: str) -> str:
@@ -1235,8 +1221,6 @@ def run_curation_ingest(
             # executor slots the previous write's straggler tail leaves
             # idle). At bench triggers the lane is job-count-bound, so
             # overlapping 2-3 fixed job latencies is the direct win.
-            # SPARK_GRAFT_CURATION_LAND=serial keeps the sequential
-            # shape reachable for interleaved A/B re-measures.
             def _land_corpus():
                 with _timed("corpus_write"):
                     admitted.drop("__sha").write.mode("overwrite").parquet(

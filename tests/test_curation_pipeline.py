@@ -69,20 +69,6 @@ def test_pipeline_packing_tiles_exactly(spark, sf_dir):
             assert s2 == s1 + 1 and b2 == e1, f"doc {d} fragments not contiguous"
 
 
-def test_pipeline_fused_pack_matches_legacy_shape(spark, sf_dir, monkeypatch):
-    """The round-15 fused pack shape (range-partitioned survivor
-    checkpoint + literal rate map + prepartitioned prefix scan) must
-    produce exactly the legacy shape's fragments — every value, not
-    just the count (the oracle pins fused-vs-DuckDB; this pins
-    fused-vs-legacy so the knob can be trusted for A/B re-measures)."""
-    q = entrymod.extra_queries()["q_llm_pipeline"]
-    monkeypatch.setenv("SPARK_GRAFT_PIPELINE_PACK", "legacy")
-    legacy = sorted(map(tuple, q(spark, sf_dir).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_PIPELINE_PACK", "fused")
-    fused = sorted(map(tuple, q(spark, sf_dir).collect()))
-    assert legacy and fused == legacy
-
-
 def test_bigram_logprob_model_semantics(spark, tmpdir):
     """Interpolated-bigram pins on a planted corpus: a document made of
     corpus-frequent bigrams outscores one pairing the SAME unigrams in

@@ -135,6 +135,68 @@ def test_epoch_shuffle_matches_reference_and_is_stable(spark, sf_dir):
     }
 
 
+def test_murmur3_int32_matches_spark_hash(spark):
+    """The driver-side murmur3 twin agrees bit-for-bit with ``F.hash``
+    (same seed 42 as HashPartitioning) on the int32 edge values and a
+    seeded random sample — a Spark hash change fails here, not as a
+    silently misplaced fast-path bucket."""
+    import random
+
+    from pulsar_elasticsearch_sync_rs_spark.operators.ordering import (
+        _murmur3_int32,
+    )
+
+    rng = random.Random(11)
+    xs = [0, 1, -1, -(2**31), 2**31 - 1] + [
+        rng.randrange(-(2**31), 2**31) for _ in range(500)
+    ]
+    got = spark.createDataFrame([(x,) for x in xs], "x int").select(
+        "x", F.hash("x").alias("h")
+    ).collect()
+    assert {r.x: r.h for r in got} == {x: _murmur3_int32(x) for x in xs}
+
+
+@pytest.mark.parametrize("n", [1, 3, 8, 13, 32])
+def test_hash_partition_keys_land_in_their_partition(spark, n):
+    """``_hash_partition_keys(n)[b]`` is routed to physical partition b
+    by ``repartition(n, col)`` — the placement global_index's uniform
+    fast path builds its range contract on."""
+    from pulsar_elasticsearch_sync_rs_spark.operators.ordering import (
+        _hash_partition_keys,
+    )
+
+    keys = _hash_partition_keys(n)
+    rows = (
+        spark.createDataFrame(list(enumerate(keys)), "b int, k int")
+        .repartition(n, "k")
+        .select("b", F.spark_partition_id().alias("pid"))
+        .collect()
+    )
+    assert len(rows) == n
+    assert all(r.b == r.pid for r in rows)
+
+
+def test_global_index_uniform_fast_path_matches_classic(spark):
+    """On the (md5 prefix, md5 hex) frame epoch_shuffle builds, the
+    closed-form uniform path assigns every id the same position as the
+    sampled range path."""
+    key = F.md5(F.concat(F.lit("ep4|"), F.col("id").cast("string")))
+    df = (
+        spark.range(3000)
+        .withColumn("__shuffle_pref", F.conv(F.substring(key, 1, 15), 16, 10).cast("long"))
+        .withColumn("__shuffle_key", key)
+    )
+    order = ["__shuffle_pref", "__shuffle_key"]
+
+    def positions(**kw):
+        out = global_index(df, order, num_partitions=8, **kw)
+        return {r.id: r.pos for r in out.select("id", "pos").collect()}
+
+    fast = positions(uniform_long_range=(0, 16**15))
+    assert fast == positions()
+    assert sorted(fast.values()) == list(range(3000))
+
+
 def test_global_index_reserved_column_guards(spark):
     """Round-12 ADVICE: a caller column named __pid/__mid/__off would
     be silently overwritten and dropped — fail loudly instead."""

@@ -131,6 +131,28 @@ def test_exclusive_prefix_sum_prepartitioned_matches(spark):
     )
 
 
+@pytest.mark.parametrize("batch_rows", [10_000, 2])
+def test_prefix_scan_rejects_tied_order_keys(spark, batch_rows):
+    """The prepartitioned scan's ``order_col must be unique``
+    precondition is ENFORCED: a tied key raises instead of silently
+    giving both rows an arbitrary order of offsets — inside one Arrow
+    batch, and across a batch boundary (2-row batches split the tied
+    pair [1, 2] | [2, 3])."""
+    base = (
+        spark.createDataFrame([(1, 5), (2, 6), (2, 7), (3, 8)], "k long, v long")
+        .repartitionByRange(1, "k")
+        .localCheckpoint(eager=True)
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(batch_rows))
+    try:
+        with pytest.raises(Exception, match="must be unique"):
+            exclusive_prefix_sum(base, "k", "v", assume_range_partitioned=True).collect()
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_pack_empty_corpus(spark):
     df = spark.createDataFrame([], "doc_id long, text string")
     assert pack_sequences(df, seq_len=8).count() == 0
