@@ -465,11 +465,13 @@ def yardsticks(spark) -> dict:
 def _state_profile(q) -> dict:
     """Streaming-state profile of a finished query, from its progress
     history (the stateOperators block the status API exposes per
-    micro-batch): peak state rows and memory across batches, plus the
-    total rows dropped by watermark. This is the streaming twin of the
-    batch plan profile — state growth is the streaming scale killer
-    the wall clock can't see at fixture size."""
-    rows_max = mem_max = dropped = 0
+    micro-batch): peak state rows and memory across batches, the total
+    rows dropped by watermark, the state-store partition count and the
+    summed state commit time. This is the streaming twin of the batch
+    plan profile — state growth is the streaming scale killer the wall
+    clock can't see at fixture size, and the partition count is the
+    load-proof witness behind a lane's commit cost."""
+    rows_max = mem_max = dropped = parts = commit_ms = 0
     for p in q.recentProgress:
         if isinstance(p, str):
             p = json.loads(p)
@@ -477,10 +479,14 @@ def _state_profile(q) -> dict:
         rows_max = max(rows_max, sum(o.get("numRowsTotal", 0) for o in ops))
         mem_max = max(mem_max, sum(o.get("memoryUsedBytes", 0) for o in ops))
         dropped += sum(o.get("numRowsDroppedByWatermark", 0) for o in ops)
+        parts = max([parts] + [o.get("numShufflePartitions", 0) for o in ops])
+        commit_ms += sum(o.get("commitTimeMs", 0) for o in ops)
     return {
         "state_rows_max": rows_max,
         "state_mem_mb_max": round(mem_max / 1e6, 3),
         "rows_dropped_by_watermark": dropped,
+        "state_partitions": parts,
+        "state_commit_ms": commit_ms,
     }
 
 
@@ -625,7 +631,9 @@ def stream_throughput(spark, sf_dir: str, violations: list[str] | None = None) -
                 f" best of {[round(w, 3) for w in walls]} ({n_out} output rows)"
                 f" [state_rows={state['state_rows_max']}"
                 f" state_mem={state['state_mem_mb_max']}MB"
-                f" wm_dropped={state['rows_dropped_by_watermark']}]",
+                f" wm_dropped={state['rows_dropped_by_watermark']}"
+                f" state_partitions={state['state_partitions']}"
+                f" state_commit={state['state_commit_ms']}ms]",
                 file=sys.stderr,
             )
             lane = {

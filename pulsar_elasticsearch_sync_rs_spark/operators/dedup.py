@@ -747,10 +747,11 @@ def dedup_incremental_bucketed(
     count matches the index's bucket count (``n_buckets`` must equal
     the value given to :func:`persist_sha_index`): Spark satisfies a
     bucketed join's distribution requirement per partition-count, and
-    with the session's ``shuffle.partitions`` differing from the bucket
-    count it would silently re-shuffle a side. The explicit
-    ``repartition(n_buckets, sha)`` pins it; Catalyst reuses that one
-    Exchange for both the groupBy and the join (plan-asserted)."""
+    with the session's batch shuffle count (``session.batch_partitions``)
+    differing from the bucket count it would silently re-shuffle a side.
+    The explicit ``repartition(n_buckets, sha)`` pins it; Catalyst
+    reuses that one Exchange for both the groupBy and the join
+    (plan-asserted)."""
     idx = spark.table(table_name).select("sha")
     hashed = batch.select(F.sha2(text, 256).alias("sha"), F.col(id_col))
     first = (

@@ -47,6 +47,8 @@ from functools import lru_cache as _lru_cache
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pulsar_elasticsearch_sync_rs_spark.session import batch_partitions
+
 # monotonically_increasing_id(): partition id in the upper 31 bits,
 # within-partition record number in the lower 33
 _MID_PARTITION_STRIDE = 1 << 33
@@ -233,10 +235,7 @@ def global_index(
                 f"global_index: column {reserved!r} already exists "
                 "(reserved as an internal projection column)"
             )
-    n_parts = int(
-        num_partitions
-        or df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n_parts = int(num_partitions or batch_partitions(df.sparkSession))
     spark = df.sparkSession
     if uniform_long_range is not None and n_parts <= 4096:
         if class_stats is not None:
@@ -941,10 +940,7 @@ def persist_block_aligned(
         raise ValueError("persist_block_aligned: block_size must be >= 1")
     if pos_col not in df.columns:
         raise ValueError(f"persist_block_aligned: no column {pos_col!r}")
-    n_parts = int(
-        num_partitions
-        or df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n_parts = int(num_partitions or batch_partitions(df.sparkSession))
     block = (F.col(pos_col) / F.lit(r)).cast("long")
     out = df.repartition(n_parts, block).sortWithinPartitions(pos_col)
     (
@@ -1086,7 +1082,7 @@ def append_block_aligned(
 
     recorded = {f["path"] for f in meta["files"]}
     block = (F.col(pos_col) / F.lit(r)).cast("long")
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_parts = batch_partitions(spark)
     n_parts = max(1, min(n_parts, ((m + tail) + r - 1) // r))
     (
         combined.repartition(n_parts, block)

@@ -54,6 +54,7 @@ from pulsar_elasticsearch_sync_rs_spark.functions.text import (
     token_count_ws,
     ws_tokens,
 )
+from pulsar_elasticsearch_sync_rs_spark.session import batch_partitions
 
 
 def exclusive_prefix_sum(
@@ -124,9 +125,7 @@ def exclusive_prefix_sum(
 
         local = sorted_part.mapInPandas(_cum, out_schema)
     else:
-        n_part = num_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
+        n_part = num_partitions or batch_partitions(spark)
         # the totals pass below collects ONE row per partition — O(n_part)
         # driver memory, fine at any sane setting but a misconfigured
         # millions-of-shuffle-partitions session would turn it into a
@@ -135,8 +134,9 @@ def exclusive_prefix_sum(
             raise ValueError(
                 f"exclusive_prefix_sum collects one total per partition; "
                 f"{n_part} partitions would collect {n_part} rows on the driver "
-                "- pass num_partitions explicitly (scan width is independent "
-                "of spark.sql.shuffle.partitions)"
+                "- pass num_partitions explicitly (the default is the session's "
+                "batch shuffle count, "
+                "spark.sql.adaptive.coalescePartitions.initialPartitionNum)"
             )
         part = df.repartitionByRange(n_part, order_col).withColumn(
             "__pid", F.spark_partition_id()

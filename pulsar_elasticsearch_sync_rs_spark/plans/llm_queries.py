@@ -41,6 +41,7 @@ from pulsar_elasticsearch_sync_rs_spark.operators.similarity import (
     knn_cosine_lsh,
 )
 from pulsar_elasticsearch_sync_rs_spark.operators.skew import spread_scan
+from pulsar_elasticsearch_sync_rs_spark.session import batch_partitions
 from pulsar_elasticsearch_sync_rs_spark.sources.batch import read_table
 
 
@@ -1944,7 +1945,7 @@ def q_llm_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # against the groupBy's shuffle output, so the expensive
     # gate/decontaminate chain still executes exactly once (its shuffle
     # files are reused across the sampling job and the checkpoint job).
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_part = batch_partitions(spark)
     surv_keys = surv_agg.repartitionByRange(n_part, "doc_id").localCheckpoint(
         eager=True
     )

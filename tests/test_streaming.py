@@ -241,6 +241,91 @@ def test_stream_dedup_within_watermark(spark, tmpdir):
     assert n == 3, f"expected 3 survivors, got {n}"
 
 
+def test_restart_keeps_checkpointed_state_partitions(spark, tmpdir):
+    """A stateful query's state-store partition count is frozen in its
+    checkpoint: restarted under a session with a different
+    ``spark.sql.shuffle.partitions``, ``dedup_stream_by_content`` keeps
+    the first run's count, and the stopped-and-restarted output equals
+    one uninterrupted run over the same two epochs."""
+    from pulsar_elasticsearch_sync_rs_spark.streaming.stream_dedup import (
+        dedup_stream_by_content,
+    )
+
+    schema = "event_id long, value string, publish_time timestamp"
+    epochs = [
+        [(1, "payload-A", "2024-01-01 00:00:00"),
+         (2, "payload-A", "2024-01-01 00:00:01"),
+         (3, "payload-B", "2024-01-01 00:00:02")],
+        [(4, "payload-A", "2024-01-01 00:00:03"),
+         (5, "payload-C", "2024-01-01 00:00:04"),
+         (6, "payload-C", "2024-01-01 00:00:05")],
+    ]
+
+    def land(src_dir, rows):
+        (
+            spark.createDataFrame(rows, "event_id long, value string, ts_s string")
+            .withColumn("publish_time", F.to_timestamp("ts_s"))
+            .drop("ts_s")
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(src_dir)
+        )
+
+    def run(src_dir, tag):
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir)
+        )
+        q = (
+            dedup_stream_by_content(stream)
+            .writeStream.outputMode("append")
+            .option("checkpointLocation", os.path.join(tmpdir, f"ckpt_{tag}"))
+            .trigger(availableNow=True)
+            .format("parquet")
+            .option("path", os.path.join(tmpdir, f"out_{tag}"))
+            .start()
+        )
+        assert q.awaitTermination(120)
+        return {
+            o["numShufflePartitions"]
+            for p in q.recentProgress
+            for o in p["stateOperators"]
+        }
+
+    def output(tag):
+        return sorted(
+            tuple(r)
+            for r in spark.read.parquet(os.path.join(tmpdir, f"out_{tag}"))
+            .select("event_id", "value")
+            .collect()
+        )
+
+    # one uninterrupted run over both epochs
+    whole = os.path.join(tmpdir, "src_whole")
+    for rows in epochs:
+        land(whole, rows)
+    run(whole, "whole")
+
+    # the same epochs, stopped after the first and restarted under a
+    # session asking for a different state partition count
+    split = os.path.join(tmpdir, "src_split")
+    land(split, epochs[0])
+    first = run(split, "split")
+    assert len(first) == 1, first
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    other = str(next(iter(first)) + 3)
+    spark.conf.set("spark.sql.shuffle.partitions", other)
+    try:
+        land(split, epochs[1])
+        again = run(split, "split")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert again == first, (first, again, other)
+    assert output("split") == output("whole")
+    assert [v for _, v in output("whole")] == ["payload-A", "payload-B", "payload-C"]
+
+
 def test_stream_dedup_against_corpus(spark, tmpdir):
     """Stream-static incremental dedup: records whose content sha is
     already in the corpus index are rejected; fresh content is admitted

@@ -30,7 +30,7 @@ import time
 
 sys.path.insert(0, ".")
 
-from pyspark.sql import SparkSession  # noqa: E402
+from pulsar_elasticsearch_sync_rs_spark.session import get_spark  # noqa: E402
 
 # stopword-rich vocabulary: the quality/repetition gate must KEEP most
 # docs (a gate that drops everything would measure the gate, not the
@@ -100,14 +100,11 @@ def main() -> None:
     sizes = [1_000, 5_000, 10_000, 25_000, 50_000]
     sizes = [s for s in sizes if s <= n_docs]
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .appName("curation-curve")
-        .getOrCreate()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark(
+        app_name="curation-curve",
+        cpus=cpus,
+        extra_conf={"spark.driver.memory": "16g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 
