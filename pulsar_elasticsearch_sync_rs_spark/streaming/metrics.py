@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import threading
 from collections import defaultdict
+from typing import NamedTuple
 
 from pyspark.sql.streaming import StreamingQueryListener
 
@@ -103,8 +104,16 @@ def _process_metrics() -> list[str]:
     return lines
 
 
-def record_batch_labeled_counters(
-    registry: MetricsRegistry,
+class LabeledCounts(NamedTuple):
+    """One micro-batch's labeled registry updates, computed but not yet
+    folded: ``(name, value, labels)`` counter increments and gauge
+    settings."""
+
+    counters: list[tuple[str, float, dict]]
+    gauges: list[tuple[str, float, dict]]
+
+
+def batch_labeled_counters(
     batch_df,
     topic: str = "topic_short",
     date: str = "date_str",
@@ -113,7 +122,7 @@ def record_batch_labeled_counters(
     app: str = "app",
     n_fields: str = "n_fields",
     max_label_values: int = 100,
-) -> None:
+) -> LabeledCounts:
     """G3 parity — per-(topic) and per-(topic, date) consumed/debug
     counters plus the per-(index, app) field-count gauge, computed in
     ONE tiny aggregation over the micro-batch (reference increments
@@ -129,7 +138,9 @@ def record_batch_labeled_counters(
     carries. The gauge itself is the batch-volume-weighted mean of
     ``n_fields`` per (index, app) — deterministic regardless of
     collect row order. Call on a persisted batch_df inside foreachBatch
-    (the runner handles persist/unpersist)."""
+    (the runner handles persist/unpersist) and fold the result with
+    :func:`fold_labeled_counters` once the batch has been delivered, so
+    a failed attempt that the checkpoint replays is counted once."""
     from pyspark.sql import functions as F
 
     rows = (
@@ -171,16 +182,34 @@ def record_batch_labeled_counters(
         ia = per_index_app.setdefault(key, [0.0, 0])
         ia[0] += (r["avg_fields"] or 0.0) * r["n"]
         ia[1] += r["n"]
-    for (i, a), (weighted, n) in per_index_app.items():
-        registry.set_gauge(
-            "es_index_doc_fields", weighted / n if n else 0.0, index=i, app=a
-        )
+    gauges = [
+        ("es_index_doc_fields", weighted / n if n else 0.0, {"index": i, "app": a})
+        for (i, a), (weighted, n) in per_index_app.items()
+    ]
+    counters = []
     for t, (n, nd) in per_topic.items():
-        registry.inc("pulsar_received_messages", n, topic=t)
-        registry.inc("pulsar_received_debug_messages", nd, topic=t)
+        counters.append(("pulsar_received_messages", n, {"topic": t}))
+        counters.append(("pulsar_received_debug_messages", nd, {"topic": t}))
     for (t, d), (n, nd) in per_topic_date.items():
-        registry.inc("pulsar_received_messages_by_date", n, topic=t, date=d)
-        registry.inc("pulsar_received_debug_messages_by_date", nd, topic=t, date=d)
+        counters.append(("pulsar_received_messages_by_date", n, {"topic": t, "date": d}))
+        counters.append(
+            ("pulsar_received_debug_messages_by_date", nd, {"topic": t, "date": d})
+        )
+    return LabeledCounts(counters, gauges)
+
+
+def fold_labeled_counters(registry: MetricsRegistry, counts: LabeledCounts) -> None:
+    """Apply one batch's :func:`batch_labeled_counters` to ``registry``."""
+    for name, value, labels in counts.gauges:
+        registry.set_gauge(name, value, **labels)
+    for name, value, labels in counts.counters:
+        registry.inc(name, value, **labels)
+
+
+def record_batch_labeled_counters(registry: MetricsRegistry, batch_df, **columns) -> None:
+    """Compute and fold in one step; ``columns`` are
+    :func:`batch_labeled_counters`' keyword arguments."""
+    fold_labeled_counters(registry, batch_labeled_counters(batch_df, **columns))
 
 
 class ObservedMetricsListener(StreamingQueryListener):

@@ -183,16 +183,27 @@ def run_pipeline_stream(
         if multi_pass:
             raw.persist()
         try:
+            counts = None
             if registry is not None:
                 # G3 parity: per-(topic)/(topic, date) counters + the
-                # (index, app) field gauge, recorded PRE-rate-limit —
+                # (index, app) field gauge, computed PRE-rate-limit —
                 # the reference increments consumed counters at consume
                 # time, before the sink-side limiter (src/pulsar.rs).
                 from pulsar_elasticsearch_sync_rs_spark.streaming.metrics import (
-                    record_batch_labeled_counters,
+                    batch_labeled_counters,
+                    fold_labeled_counters,
                 )
 
-                record_batch_labeled_counters(registry, batch_df)
+                counts = batch_labeled_counters(batch_df)
+            if needs_echo:
+                from pulsar_elasticsearch_sync_rs_spark.streaming.side_outputs import (
+                    echo_debug_topics,
+                )
+
+                # K2 reads the pre-limit batch: the reference echoes at
+                # consume time (src/pulsar.rs:256-259), before its
+                # sink-side limiter (src/es.rs:359-373)
+                echo_debug_topics(batch_df, cfg.debug_topics)
             if cfg.rate_limits:
                 from pulsar_elasticsearch_sync_rs_spark.operators.rate_limit import (
                     rate_limit_per_second,
@@ -205,17 +216,18 @@ def run_pipeline_stream(
                     ts="publish_time",
                     tiebreaker="event_id",
                 )
-            if needs_echo or needs_files:
+            if needs_files:
                 from pulsar_elasticsearch_sync_rs_spark.streaming.side_outputs import (
-                    echo_debug_topics,
                     write_debug_files,
                 )
 
-                if needs_echo:
-                    echo_debug_topics(batch_df, cfg.debug_topics)  # K2
-                if needs_files:
-                    write_debug_files(batch_df, debug_files_dir)  # K3
+                write_debug_files(batch_df, debug_files_dir)  # K3
             inner_sink(batch_df, batch_id)
+            # fold only once the batch is delivered: a sink that raises
+            # (strict bulk rejection) makes the checkpoint replay this
+            # batch, which would otherwise count it twice
+            if counts is not None:
+                fold_labeled_counters(registry, counts)
         finally:
             if multi_pass:
                 raw.unpersist()

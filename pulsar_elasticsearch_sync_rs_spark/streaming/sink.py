@@ -10,18 +10,22 @@ bulk transport:
 
 - ``ParquetBulkTransport`` — the test/verification sink: one parquet
   dataset partitioned by index (file layout ≡ index routing).
-- ``EsBulkTransport`` — real Elasticsearch ``_bulk`` over HTTP from
-  each executor partition (no driver funnel, no collect); gated behind
-  an import-try since no ES is present in this environment. Unlike the
-  reference (ack-before-write, at-most-once, no retry —
-  ``src/pulsar.rs:227-232``, ``src/es.rs:165``), checkpointed
+- ``EsBulkTransport`` — real Elasticsearch ``_bulk`` over HTTP, sent
+  from the driver inside the ``foreachBatch`` callback like the
+  reference's single sink loop; the NDJSON lines are built JVM-side
+  and collected in one job, so the per-batch path starts no Python
+  worker. Unlike the reference (ack-before-write, at-most-once, no
+  retry — ``src/pulsar.rs:227-232``, ``src/es.rs:165``), checkpointed
   foreachBatch gives at-least-once; documents carry no _id, matching
   the reference's auto-id behavior.
 
 Scale: the partitionBy write shuffles nothing (dynamic partition write
-is a per-task file split); ES transport batches `buffer_size` docs per
-bulk call per partition, which is exactly the reference's buffering
-but parallel per executor.
+is a per-task file split). The ES transport holds one micro-batch of
+NDJSON on the driver (about 1.1 MB per 1,000 log-sized docs); source
+admission (``maxEntriesPerTrigger`` / ``maxFilesPerTrigger``) bounds
+that batch, the port's equivalent of the reference's bounded channel
+(X1), and the body is cut into ``buffer_size``-doc bulk calls, exactly
+the reference's buffering.
 """
 
 from __future__ import annotations
@@ -76,17 +80,30 @@ class IdempotentParquetBulkTransport:
 
 @dataclass
 class EsBulkTransport:
-    """Real ES bulk transport: each executor partition POSTs its rows
-    as ``{"index": {"_index": idx}}\\n{doc}`` NDJSON chunks of
-    ``buffer_size`` (reference default 1000, ``src/args.rs:105-107``).
+    """Real ES bulk transport: the driver collects the micro-batch's
+    pre-serialized ``{"index": {"_index": idx}}\\n{doc}`` NDJSON pairs
+    (one JVM job) and POSTs them in row order, in sequence, as bodies
+    of ``buffer_size`` actions (reference default 1000,
+    ``src/args.rs:105-107``). Sending from the driver keeps Python
+    workers off the per-batch path: every Python-worker task costs a
+    fixed ~0.2 s of CPU before user code runs (PySpark's per-task
+    import-cache invalidation), more than the whole send of a
+    log-sized micro-batch.
+
+    Memory bound: the driver holds one micro-batch of NDJSON, about
+    1.1 KB per log-sized doc. Source admission bounds the batch —
+    ``maxEntriesPerTrigger = cfg.batch_size`` for the pulsar source
+    (``runner.pulsar_reader_options``), ``maxFilesPerTrigger`` for the
+    file source — the port's equivalent of the reference's bounded
+    channel (X1, ``src/main.rs:61``).
 
     K1 parity — per-item error accounting: Elasticsearch returns HTTP
     200 with ``"errors": true`` when individual items were rejected;
     the reference walks the response items and splits success/failure
     counts per index (reference ``src/es.rs:155-188``, counters
-    ``src/prometheus.rs:35-126``). Here each executor partition parses
-    its bulk responses and ships back ONE tiny (index, ok, failed)
-    summary per index — aggregated driver-side into ``registry`` as
+    ``src/prometheus.rs:35-126``). Each response's items are counted
+    as they arrive into per-index ``[ok, failed]`` stats (kept as
+    ``last_stats``) and folded into ``registry`` as
     ``es_write_success`` / ``es_write_failure`` labeled by index.
 
     ``strict=True`` raises on any item failure so the checkpointed
@@ -113,80 +130,22 @@ class EsBulkTransport:
     def write(self, batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        es_url, buffer_size = self.es_url, self.buffer_size
-
         # NDJSON action+doc lines are built JVM-side (to_json/concat run
         # in whole-stage codegen): the reference serializes in-process
-        # (src/es.rs:129-191) and the previous json.dumps-per-row here
-        # crossed JVM->Python row-at-a-time — the measured throughput
-        # ceiling of the sink. Python below only joins lines and POSTs.
+        # (src/es.rs:129-191). Python below only joins lines and POSTs.
         meta = [F.col(self.index_col).alias("_index")]
         if self.id_col is not None:
             meta.append(F.col(self.id_col).cast("string").alias("_id"))
         action = F.to_json(F.struct(F.struct(*meta).alias("index")))
         doc = F.coalesce(F.to_json(F.col(self.doc_col)), F.lit("{}"))
-        payload = batch_df.select(
+        rows = batch_df.select(
             F.col(self.index_col).alias("__idx"),
             F.concat(action, F.lit("\n"), doc).alias("__line"),
-        )
+        ).collect()
 
-        def send_partition(rows):
-            import urllib.request
-            from collections import Counter
-
-            ok: Counter = Counter()
-            failed: Counter = Counter()
-            buf: list[str] = []
-            idxs: list[str] = []  # target index of each buffered action
-
-            def flush():
-                if not buf:
-                    return
-                body = "\n".join(buf) + "\n"
-                req = urllib.request.Request(
-                    f"{es_url}/_bulk",
-                    data=body.encode(),
-                    headers={"Content-Type": "application/x-ndjson"},
-                )
-                raw = urllib.request.urlopen(req, timeout=30).read()
-                try:
-                    resp = json.loads(raw) if raw else {}
-                except ValueError:
-                    resp = {"errors": True, "items": []}
-                if not resp.get("errors"):
-                    for idx in idxs:
-                        ok[idx] += 1
-                else:
-                    # items are positionally parallel to the actions sent
-                    items = resp.get("items") or []
-                    for pos, idx in enumerate(idxs):
-                        op = items[pos].get("index", {}) if pos < len(items) else {}
-                        status = op.get("status", 599)
-                        if op.get("error") is not None or int(status) >= 300:
-                            failed[idx] += 1
-                        else:
-                            ok[idx] += 1
-                buf.clear()
-                idxs.clear()
-
-            for row in rows:
-                buf.append(row[1])  # pre-serialized "action\ndoc" pair
-                idxs.append(row[0])
-                if len(idxs) >= buffer_size:
-                    flush()
-            flush()
-            for idx in set(ok) | set(failed):
-                yield (idx, ok[idx], failed[idx])
-
-        # mapPartitions (not foreachPartition) so each partition returns
-        # its tiny per-index tally; the collect is O(partitions × indexes)
-        # rows of three scalars — not a data-path collect.
-        tallies = payload.rdd.mapPartitions(send_partition).collect()
         stats: dict[str, list[int]] = {}
-        for idx, n_ok, n_failed in tallies:
-            s = stats.setdefault(idx, [0, 0])
-            s[0] += n_ok
-            s[1] += n_failed
+        for start in range(0, len(rows), self.buffer_size):
+            self._post(rows[start : start + self.buffer_size], stats)
         self.last_stats = stats
         n_failed_total = sum(f for _, f in stats.values())
         if self.strict and n_failed_total:
@@ -203,6 +162,34 @@ class EsBulkTransport:
                     self.registry.inc("es_write_success", n_ok, index=idx)
                 if n_failed:
                     self.registry.inc("es_write_failure", n_failed, index=idx)
+
+    def _post(self, chunk: list, stats: dict[str, list[int]]) -> None:
+        """POST one ``_bulk`` body of (index, "action\\ndoc") rows and
+        count each item's result into ``stats[index] = [ok, failed]``."""
+        import urllib.request
+
+        body = "\n".join(row[1] for row in chunk) + "\n"
+        req = urllib.request.Request(
+            f"{self.es_url}/_bulk",
+            data=body.encode(),
+            headers={"Content-Type": "application/x-ndjson"},
+        )
+        with urllib.request.urlopen(req, timeout=30) as http_resp:
+            raw = http_resp.read()
+        try:
+            resp = json.loads(raw) if raw else {}
+        except ValueError:
+            resp = {"errors": True, "items": []}
+        # items are positionally parallel to the actions sent
+        items = (resp.get("items") or []) if resp.get("errors") else None
+        for pos, row in enumerate(chunk):
+            s = stats.setdefault(row[0], [0, 0])
+            if items is not None:
+                op = items[pos].get("index", {}) if pos < len(items) else {}
+                if op.get("error") is not None or int(op.get("status", 599)) >= 300:
+                    s[1] += 1
+                    continue
+            s[0] += 1
 
 
 def bulk_sink_foreach_batch(transport):

@@ -287,3 +287,123 @@ def test_es_sink_crash_replay_effectively_once(spark, tmpdir):
     finally:
         server.shutdown()
         server.server_close()
+
+
+def _bulk_actions(payload: bytes) -> int:
+    return payload.count(b"\n") // 2
+
+
+def test_es_bulk_chunks_on_the_driver_in_row_order(spark):
+    """The driver cuts the collected micro-batch into ``buffer_size``
+    bodies whatever its partitioning: 500 docs in 25 partitions reach
+    ES as ONE request at buffer_size=1000 (a per-partition sender would
+    send 25), as 200/200/100 actions at buffer_size=200, in row order.
+    An empty batch sends nothing and leaves no registry entry."""
+    from pyspark.sql import functions as F
+
+    from pulsar_elasticsearch_sync_rs_spark.streaming.metrics import MetricsRegistry
+
+    captured.clear()
+    server = ThreadingHTTPServer(("127.0.0.1", 0), _BulkCapture)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    try:
+        url = f"http://127.0.0.1:{server.server_address[1]}"
+        df = spark.range(500, numPartitions=25).select(
+            F.concat(F.lit("app-"), (F.col("id") % 3).cast("string")).alias("index"),
+            F.struct(F.col("id").alias("n")).alias("doc"),
+        )
+        assert df.rdd.getNumPartitions() == 25
+
+        registry = MetricsRegistry()
+        EsBulkTransport(es_url=url, buffer_size=1000, registry=registry).write(df, 0)
+        assert [_bulk_actions(p) for p in captured] == [500]
+        assert sum(
+            registry.get("es_write_success", index=f"app-{k}") for k in range(3)
+        ) == 500
+
+        captured.clear()
+        EsBulkTransport(es_url=url, buffer_size=200).write(df, 1)
+        assert [_bulk_actions(p) for p in captured] == [200, 200, 100]
+        docs = [
+            json.loads(line)["n"]
+            for payload in captured
+            for line in payload.decode().strip().split("\n")[1::2]
+        ]
+        assert docs == list(range(500))
+
+        captured.clear()
+        registry = MetricsRegistry()
+        empty = EsBulkTransport(es_url=url, buffer_size=200, registry=registry)
+        empty.write(df.filter(F.lit(False)), 2)
+        assert captured == []
+        assert empty.last_stats == {}
+        assert registry.render_prometheus(include_process=False).strip() == ""
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
+def test_strict_replay_folds_labeled_counters_once(spark, tmpdir):
+    """The runner's labeled consumed counters fold only after the sink
+    delivered the batch: a strict transport whose first attempt ES
+    rejects kills the query with the registry untouched, and the
+    restart's replay counts every row exactly once."""
+    import os
+
+    import pytest
+    from pyspark.sql.utils import StreamingQueryException
+
+    from pulsar_elasticsearch_sync_rs_spark.config import PipelineConfig
+    from pulsar_elasticsearch_sync_rs_spark.streaming.metrics import MetricsRegistry
+    from pulsar_elasticsearch_sync_rs_spark.streaming.runner import (
+        read_events_stream,
+        run_pipeline_stream,
+    )
+
+    captured.clear()
+    _FlakyBulk.fail_first[0] = True
+    _FlakyBulk.es_state = {}
+    server = ThreadingHTTPServer(("127.0.0.1", 0), _FlakyBulk)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    try:
+        url = f"http://127.0.0.1:{server.server_address[1]}"
+        src_dir = os.path.join(tmpdir, "src")
+        ts0 = 1_704_067_200 * 10**9  # 2024-01-01T00:00:00Z in ns
+        rows = [
+            Row(event_id=i, ts=ts0 + i * 10**9, user_id=i,
+                event_type="alpha" if i < 12 else "beta", value=1.0,
+                props=json.dumps({"app": "a1", "k": i}))
+            for i in range(20)
+        ]
+        spark.createDataFrame(rows).coalesce(1).write.parquet(src_dir)
+
+        registry = MetricsRegistry()
+        transport = EsBulkTransport(
+            es_url=url, buffer_size=1000, strict=True, id_col="event_id", registry=registry
+        )
+        ckpt = os.path.join(tmpdir, "ckpt_labeled")
+
+        def run():
+            return run_pipeline_stream(
+                spark, PipelineConfig(), read_events_stream(spark, src_dir),
+                transport, ckpt, available_now=True, registry=registry,
+            )
+
+        q = run()
+        with pytest.raises(StreamingQueryException, match="rejected"):
+            q.awaitTermination()
+        assert registry.get("pulsar_received_messages", topic="alpha") == 0
+        assert registry.get("es_write_success", index="alpha-2024.01.01") == 0
+
+        q = run()
+        q.awaitTermination()
+        assert len(_FlakyBulk.es_state) == 20
+        for topic, n in (("alpha", 12), ("beta", 8)):
+            assert registry.get("pulsar_received_messages", topic=topic) == n
+            assert registry.get(
+                "pulsar_received_messages_by_date", topic=topic, date="2024.01.01"
+            ) == n
+            assert registry.get("es_write_success", index=f"{topic}-2024.01.01") == n
+    finally:
+        server.shutdown()
+        server.server_close()

@@ -104,6 +104,42 @@ def test_stream_end_to_end(spark, sf_dir, tmpdir):
         spark.streams.removeListener(listener)
 
 
+def test_debug_topic_echo_reads_the_pre_limit_batch(spark, tmpdir, caplog):
+    """K2 echoes every debug-topic record the batch consumed, before the
+    rate limiter (reference src/pulsar.rs:256-259 echoes at consume
+    time; its limiter is sink-side, src/es.rs:359-373): three
+    same-second records of one app capped at 1/s are all logged while
+    the sink receives one."""
+    import json
+    import logging
+
+    from pyspark.sql import Row
+
+    src_dir = os.path.join(tmpdir, "src")
+    ts0 = 1_704_067_200 * 10**9  # 2024-01-01T00:00:00Z in ns
+    rows = [
+        Row(event_id=i, ts=ts0 + i * 1000, user_id=i, event_type="t", value=1.0,
+            props=json.dumps({"app": "a1", "k": i}))
+        for i in range(3)
+    ]
+    spark.createDataFrame(rows).coalesce(1).write.parquet(src_dir)
+    out_dir = os.path.join(tmpdir, "out")
+    cfg = PipelineConfig(debug_topics=("t",), rate_limits={"a1": 1})
+    with caplog.at_level(logging.INFO, logger="pulsar_es_sync_spark"):
+        q = run_pipeline_stream(
+            spark, cfg, read_events_stream(spark, src_dir),
+            ParquetBulkTransport(out_dir), os.path.join(tmpdir, "ckpt"),
+            available_now=True,
+        )
+        q.awaitTermination(120)
+    echoed = [
+        r for r in caplog.records
+        if r.name == "pulsar_es_sync_spark" and r.getMessage().startswith("debug topic t:")
+    ]
+    assert len(echoed) == 3
+    assert spark.read.parquet(out_dir).count() == 1
+
+
 def test_stateful_rate_limit_across_batches(spark, tmpdir):
     """The per-(app, second) admission count persists across
     micro-batches: 2 batches × 3 records in the same second for app a
