@@ -1,4 +1,3 @@
 from pulsar_elasticsearch_sync_rs_spark.streaming.runner import run_pipeline_stream
-from pulsar_elasticsearch_sync_rs_spark.streaming.sink import bulk_sink_foreach_batch
 
-__all__ = ["run_pipeline_stream", "bulk_sink_foreach_batch"]
+__all__ = ["run_pipeline_stream"]

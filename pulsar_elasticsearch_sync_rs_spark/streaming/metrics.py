@@ -4,10 +4,17 @@ The reference exposes Prometheus counters (consumed / consumed-debug /
 write success-failure, by topic and (topic, date)) via a warp HTTP
 endpoint (reference ``src/prometheus.rs:7-194``). Spark-natively:
 
-- per-micro-batch aggregates ride the stream itself via
-  ``DataFrame.observe`` (no extra pass over the data);
-- a ``StreamingQueryListener`` collects each batch's observed values
+- the unlabeled consumed counters ride the stream itself via
+  ``DataFrame.observe`` (no extra pass over the data), and a
+  ``StreamingQueryListener`` collects each batch's observed values
   into an in-process registry;
+- the labeled counters and the field gauge come from
+  :func:`labeled_counts` over the rows of ONE narrow collect of the
+  persisted micro-batch, the same collect that feeds the K2 debug echo
+  (``runner.sink_fn``) — no second source scan, no aggregation job.
+  The driver holds six scalars per admitted row (plus the payloads of
+  debug-topic rows), bounded by source admission like the sink's
+  NDJSON;
 - text exposition renders the registry in Prometheus format (the
   cluster deployment would instead flip
   ``spark.ui.prometheus.enabled=true`` and scrape the driver; this
@@ -21,6 +28,13 @@ from collections import defaultdict
 from typing import NamedTuple
 
 from pyspark.sql.streaming import StreamingQueryListener
+
+
+def _escape_label(value) -> str:
+    """Label value escaping of the text format 0.0.4: ``app`` comes
+    from the log payload, and a raw quote or newline would let one
+    message forge series on ``/metrics``."""
+    return str(value).replace("\\", "\\\\").replace('"', '\\"').replace("\n", "\\n")
 
 
 class MetricsRegistry:
@@ -58,7 +72,7 @@ class MetricsRegistry:
         lines = []
         for (name, labels), value in sorted(items):
             if labels:
-                lbl = ",".join(f'{k}="{v}"' for k, v in labels)
+                lbl = ",".join(f'{k}="{_escape_label(v)}"' for k, v in labels)
                 lines.append(f"{name}{{{lbl}}} {value}")
             else:
                 lines.append(f"{name} {value}")
@@ -113,78 +127,55 @@ class LabeledCounts(NamedTuple):
     gauges: list[tuple[str, float, dict]]
 
 
-def batch_labeled_counters(
-    batch_df,
-    topic: str = "topic_short",
-    date: str = "date_str",
-    is_debug: str = "is_debug",
-    index: str = "index",
-    app: str = "app",
-    n_fields: str = "n_fields",
-    max_label_values: int = 100,
-) -> LabeledCounts:
+LABEL_COLUMNS = ("topic_short", "date_str", "index", "app", "is_debug", "n_fields")
+
+
+def labeled_counts(rows, max_label_values: int = 100) -> LabeledCounts:
     """G3 parity — per-(topic) and per-(topic, date) consumed/debug
-    counters plus the per-(index, app) field-count gauge, computed in
-    ONE tiny aggregation over the micro-batch (reference increments
-    these per record, ``src/prometheus.rs:7-126``, gauge
-    ``src/es.rs:353-355``).
+    counters plus the per-(index, app) field-count gauge of one
+    micro-batch (reference increments these per record,
+    ``src/prometheus.rs:7-126``, gauge ``src/es.rs:353-355``).
 
-    The collect is O(topics × dates × indexes × apps) rows of scalars —
-    label cardinality, not data volume. ``app`` and ``index`` are
-    user-data-derived and therefore UNBOUNDED; only the
-    ``max_label_values`` highest-volume values of each keep their own
-    gauge label, the tail is folded into ``__OTHER__`` so the registry
-    (and the driver heap) stays bounded no matter what the stream
-    carries. The gauge itself is the batch-volume-weighted mean of
-    ``n_fields`` per (index, app) — deterministic regardless of
-    collect row order. Call on a persisted batch_df inside foreachBatch
-    (the runner handles persist/unpersist) and fold the result with
-    :func:`fold_labeled_counters` once the batch has been delivered, so
-    a failed attempt that the checkpoint replays is counted once."""
-    from pyspark.sql import functions as F
+    ``rows`` is a list of collected rows that start with
+    :data:`LABEL_COLUMNS`, in that order; it is read twice. ``app`` and
+    ``index`` are user-data-derived and therefore UNBOUNDED: only the
+    ``max_label_values`` highest-volume values of each (ties broken by
+    name) keep their own gauge label, the tail folds into ``__OTHER__``
+    so the registry stays bounded no matter what the stream carries.
+    The gauge is the mean of the non-null ``n_fields`` per (index, app).
+    Fold the result with :func:`fold_labeled_counters` once the batch
+    has been delivered, so a failed attempt that the checkpoint replays
+    is counted once."""
+    per_topic: dict[str, list[int]] = defaultdict(lambda: [0, 0])
+    per_topic_date: dict[tuple, list[int]] = defaultdict(lambda: [0, 0])
+    app_volume: dict[str, int] = defaultdict(int)
+    index_volume: dict[str, int] = defaultdict(int)
+    for topic, date, index, app, is_debug, *_ in rows:
+        debug = 1 if is_debug else 0
+        for c in (per_topic[topic], per_topic_date[(topic, date)]):
+            c[0] += 1
+            c[1] += debug
+        app_volume[app] += 1
+        index_volume[index] += 1
 
-    rows = (
-        batch_df.groupBy(topic, date, index, app)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col(is_debug), 1).otherwise(0)).alias("n_debug"),
-            F.avg(n_fields).alias("avg_fields"),
-        )
-        .collect()
-    )
-    per_topic: dict[str, list[float]] = {}
-    per_topic_date: dict[tuple, list[float]] = {}
-    app_volume: dict[str, int] = {}
-    index_volume: dict[str, int] = {}
-    for r in rows:
-        t = per_topic.setdefault(r[topic], [0, 0])
-        t[0] += r["n"]
-        t[1] += r["n_debug"] or 0
-        td = per_topic_date.setdefault((r[topic], r[date]), [0, 0])
-        td[0] += r["n"]
-        td[1] += r["n_debug"] or 0
-        app_volume[r[app]] = app_volume.get(r[app], 0) + r["n"]
-        index_volume[r[index]] = index_volume.get(r[index], 0) + r["n"]
-    # top-N by batch volume keep their label value (ties broken by name
-    # for determinism); everything else folds into __OTHER__
-    keep_apps = set(
-        sorted(app_volume, key=lambda a: (-app_volume[a], a))[:max_label_values]
-    )
-    keep_indexes = set(
-        sorted(index_volume, key=lambda i: (-index_volume[i], i))[:max_label_values]
-    )
-    per_index_app: dict[tuple, list[float]] = {}
-    for r in rows:
-        key = (
-            r[index] if r[index] in keep_indexes else "__OTHER__",
-            r[app] if r[app] in keep_apps else "__OTHER__",
-        )
-        ia = per_index_app.setdefault(key, [0.0, 0])
-        ia[0] += (r["avg_fields"] or 0.0) * r["n"]
-        ia[1] += r["n"]
+    def top(volume: dict) -> set:
+        return set(sorted(volume, key=lambda v: (-volume[v], v))[:max_label_values])
+
+    keep_apps, keep_indexes = top(app_volume), top(index_volume)
+    per_index_app: dict[tuple, list[int]] = defaultdict(lambda: [0, 0])
+    for _, _, index, app, _, n_fields, *_ in rows:
+        ia = per_index_app[
+            (
+                index if index in keep_indexes else "__OTHER__",
+                app if app in keep_apps else "__OTHER__",
+            )
+        ]
+        if n_fields is not None:
+            ia[0] += n_fields
+            ia[1] += 1
     gauges = [
-        ("es_index_doc_fields", weighted / n if n else 0.0, {"index": i, "app": a})
-        for (i, a), (weighted, n) in per_index_app.items()
+        ("es_index_doc_fields", total / n if n else 0.0, {"index": i, "app": a})
+        for (i, a), (total, n) in per_index_app.items()
     ]
     counters = []
     for t, (n, nd) in per_topic.items():
@@ -198,18 +189,22 @@ def batch_labeled_counters(
     return LabeledCounts(counters, gauges)
 
 
+def batch_labeled_counters(batch_df) -> LabeledCounts:
+    """:func:`labeled_counts` of a DataFrame carrying :data:`LABEL_COLUMNS`."""
+    return labeled_counts(batch_df.select(*LABEL_COLUMNS).collect())
+
+
 def fold_labeled_counters(registry: MetricsRegistry, counts: LabeledCounts) -> None:
-    """Apply one batch's :func:`batch_labeled_counters` to ``registry``."""
+    """Apply one batch's :func:`labeled_counts` to ``registry``."""
     for name, value, labels in counts.gauges:
         registry.set_gauge(name, value, **labels)
     for name, value, labels in counts.counters:
         registry.inc(name, value, **labels)
 
 
-def record_batch_labeled_counters(registry: MetricsRegistry, batch_df, **columns) -> None:
-    """Compute and fold in one step; ``columns`` are
-    :func:`batch_labeled_counters`' keyword arguments."""
-    fold_labeled_counters(registry, batch_labeled_counters(batch_df, **columns))
+def record_batch_labeled_counters(registry: MetricsRegistry, batch_df) -> None:
+    """Compute and fold in one step."""
+    fold_labeled_counters(registry, batch_labeled_counters(batch_df))
 
 
 class ObservedMetricsListener(StreamingQueryListener):

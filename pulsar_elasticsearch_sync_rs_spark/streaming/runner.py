@@ -34,7 +34,16 @@ from pyspark.sql import types as T
 
 from pulsar_elasticsearch_sync_rs_spark.config import PipelineConfig
 from pulsar_elasticsearch_sync_rs_spark.plans.pipeline import etl_transform
-from pulsar_elasticsearch_sync_rs_spark.streaming.sink import bulk_sink_foreach_batch
+from pulsar_elasticsearch_sync_rs_spark.streaming.metrics import (
+    LABEL_COLUMNS,
+    fold_labeled_counters,
+    labeled_counts,
+)
+from pulsar_elasticsearch_sync_rs_spark.streaming.side_outputs import (
+    echo_column,
+    echo_debug_rows,
+    write_debug_files,
+)
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -171,12 +180,16 @@ def run_pipeline_stream(
             F.sum(F.when(F.col("is_debug"), 1).otherwise(0)).alias("consumed_debug"),
             F.avg("n_fields").alias("avg_fields"),
         )
-    inner_sink = bulk_sink_foreach_batch(transport)
-    needs_echo = bool(cfg.debug_topics)
+    # G3 labeled counters and the K2 echo share ONE narrow collect of
+    # the pre-limit batch: the reference counts and echoes at consume
+    # time (src/pulsar.rs:256-262), before its sink-side limiter
+    # (src/es.rs:359-373)
+    accounting = [*LABEL_COLUMNS, echo_column(cfg.debug_topics)]
+    needs_rows = bool(cfg.debug_topics) or registry is not None
     needs_files = bool(cfg.inject_key and debug_files_dir)
     # more than one consumer of the micro-batch → persist once instead
     # of recomputing the chain per pass
-    multi_pass = needs_echo or needs_files or registry is not None
+    multi_pass = needs_rows or needs_files
 
     def sink_fn(batch_df, batch_id):
         raw = batch_df  # persist handle (batch_df is rebound below)
@@ -184,26 +197,11 @@ def run_pipeline_stream(
             raw.persist()
         try:
             counts = None
-            if registry is not None:
-                # G3 parity: per-(topic)/(topic, date) counters + the
-                # (index, app) field gauge, computed PRE-rate-limit —
-                # the reference increments consumed counters at consume
-                # time, before the sink-side limiter (src/pulsar.rs).
-                from pulsar_elasticsearch_sync_rs_spark.streaming.metrics import (
-                    batch_labeled_counters,
-                    fold_labeled_counters,
-                )
-
-                counts = batch_labeled_counters(batch_df)
-            if needs_echo:
-                from pulsar_elasticsearch_sync_rs_spark.streaming.side_outputs import (
-                    echo_debug_topics,
-                )
-
-                # K2 reads the pre-limit batch: the reference echoes at
-                # consume time (src/pulsar.rs:256-259), before its
-                # sink-side limiter (src/es.rs:359-373)
-                echo_debug_topics(batch_df, cfg.debug_topics)
+            if needs_rows:
+                rows = batch_df.select(*accounting).collect()
+                if registry is not None:
+                    counts = labeled_counts(rows)
+                echo_debug_rows(rows)
             if cfg.rate_limits:
                 from pulsar_elasticsearch_sync_rs_spark.operators.rate_limit import (
                     rate_limit_per_second,
@@ -217,12 +215,8 @@ def run_pipeline_stream(
                     tiebreaker="event_id",
                 )
             if needs_files:
-                from pulsar_elasticsearch_sync_rs_spark.streaming.side_outputs import (
-                    write_debug_files,
-                )
-
                 write_debug_files(batch_df, debug_files_dir)  # K3
-            inner_sink(batch_df, batch_id)
+            transport.write(batch_df, batch_id)
             # fold only once the batch is delivered: a sink that raises
             # (strict bulk rejection) makes the checkpoint replay this
             # batch, which would otherwise count it twice

@@ -9,10 +9,12 @@
 - K4: Prometheus text exposition over HTTP (reference warp server on
   :3030, ``src/prometheus.rs:157-194``).
 
-Spark-first: K2/K3 are secondary writes inside the same foreachBatch —
-no second source scan, no extra shuffle (the text write partitions by
-the already-computed topic column). K4 serves the in-process registry
-filled by the observe() listener.
+Spark-first: K2/K3 run inside the same foreachBatch over the persisted
+micro-batch — no second source scan, no extra shuffle. K2 reads the
+echo column of the runner's one narrow collect, which also feeds the
+labeled counters (``metrics.labeled_counts``); K3's text write
+partitions by the already-computed topic column. K4 serves the
+in-process registry.
 """
 
 from __future__ import annotations
@@ -20,8 +22,9 @@ from __future__ import annotations
 import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from itertools import islice
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pulsar_elasticsearch_sync_rs_spark.streaming.metrics import MetricsRegistry
@@ -29,20 +32,25 @@ from pulsar_elasticsearch_sync_rs_spark.streaming.metrics import MetricsRegistry
 log = logging.getLogger("pulsar_es_sync_spark")
 
 
-def echo_debug_topics(batch_df: DataFrame, debug_topics: tuple[str, ...], max_rows: int = 100) -> None:
-    """K2 — log records of debug topics (bounded sample per batch; the
-    reference logs every record at info, unbounded — capped here so a
-    hot topic can't flood the driver log)."""
-    if not debug_topics:
-        return
-    rows = (
-        batch_df.filter(F.col("topic_short").isin(list(debug_topics)))
-        .select("topic_short", "value")
-        .limit(max_rows)
-        .collect()
+ECHO_COLUMN = "echo_value"
+
+
+def echo_column(debug_topics: tuple[str, ...]) -> Column:
+    """K2's column of the runner's collect: the payload of debug-topic
+    records, NULL for every other record."""
+    return F.when(F.col("topic_short").isin(list(debug_topics)), F.col("value")).alias(
+        ECHO_COLUMN
     )
-    for r in rows:
-        log.info("debug topic %s: %s", r["topic_short"], r["value"])
+
+
+def echo_debug_rows(rows, max_rows: int = 100) -> None:
+    """K2 — log the records whose :func:`echo_column` is set (bounded
+    sample per batch; the reference logs every record at info,
+    unbounded — capped here so a hot topic can't flood the driver
+    log)."""
+    echoed = (r for r in rows if r[ECHO_COLUMN] is not None)
+    for r in islice(echoed, max_rows):
+        log.info("debug topic %s: %s", r["topic_short"], r[ECHO_COLUMN])
 
 
 def write_debug_files(batch_df: DataFrame, out_dir: str) -> None:

@@ -191,11 +191,3 @@ class EsBulkTransport:
                     continue
             s[0] += 1
 
-
-def bulk_sink_foreach_batch(transport):
-    """Adapter: transport -> foreachBatch callable."""
-
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        transport.write(batch_df, batch_id)
-
-    return fn

@@ -224,7 +224,6 @@ def test_es_sink_crash_replay_effectively_once(spark, tmpdir):
     from pyspark.sql.utils import StreamingQueryException
 
     from pulsar_elasticsearch_sync_rs_spark.streaming.metrics import MetricsRegistry
-    from pulsar_elasticsearch_sync_rs_spark.streaming.sink import bulk_sink_foreach_batch
 
     captured.clear()
     _FlakyBulk.fail_first[0] = True
@@ -255,7 +254,7 @@ def test_es_sink_crash_replay_effectively_once(spark, tmpdir):
                 .coalesce(1)
             )
             return (
-                stream.writeStream.foreachBatch(bulk_sink_foreach_batch(transport))
+                stream.writeStream.foreachBatch(transport.write)
                 .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
                 .start()

@@ -140,6 +140,143 @@ def test_debug_topic_echo_reads_the_pre_limit_batch(spark, tmpdir, caplog):
     assert spark.read.parquet(out_dir).count() == 1
 
 
+@pytest.mark.parametrize("rate_limits, max_jobs", [({"a1": 100}, 3), ({}, 2)])
+def test_micro_batch_reads_the_batch_once_for_accounting(spark, tmpdir, rate_limits, max_jobs):
+    """Labeled counters and the K2 echo share one collect per micro-batch:
+    with a registry and a debug topic, a batch runs that collect plus the
+    sink's jobs (one parquet write; the limiter's window adds a shuffle
+    stage), not a separate aggregation and echo query."""
+    import json
+
+    from pyspark.sql import Row
+
+    src_dir = os.path.join(tmpdir, "src")
+    ts0 = 1_704_067_200 * 10**9  # 2024-01-01T00:00:00Z in ns
+    for f in range(4):  # one file per micro-batch
+        rows = [
+            Row(event_id=f * 10 + i, ts=ts0 + (f * 10 + i) * 10**9, user_id=i, event_type="t",
+                value=1.0, props=json.dumps({"app": "a1", "k": i}))
+            for i in range(5)
+        ]
+        spark.createDataFrame(rows).coalesce(1).write.mode("append").parquet(src_dir)
+    cfg = PipelineConfig(debug_topics=("t",), rate_limits=rate_limits)
+    registry = MetricsRegistry()
+    q = run_pipeline_stream(
+        spark, cfg, read_events_stream(spark, src_dir, max_files_per_trigger=1),
+        ParquetBulkTransport(os.path.join(tmpdir, "out")), os.path.join(tmpdir, "ckpt"),
+        available_now=True, registry=registry,
+    )
+    q.awaitTermination(120)
+    batches = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert len(batches) == 4
+    assert registry.get("pulsar_received_messages", topic="t") == 20
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) / len(batches) <= max_jobs, (len(jobs), len(batches))
+
+
+def test_labeled_counts_match_a_spark_groupby(spark):
+    """``labeled_counts`` over collected rows equals a Spark groupBy
+    written here: per-topic and per-(topic, date) consumed/debug
+    counters, and the per-(index, app) mean-field gauge after the top-N
+    ``__OTHER__`` fold (ties broken by name). The fixture spans two
+    topics and two dates, debug rows by level and by pattern, a missing
+    app (routed to ``__DEFAULT_APP__``), and more apps and indexes than
+    ``max_label_values``."""
+    import json
+
+    from pyspark.sql import Row
+
+    from pulsar_elasticsearch_sync_rs_spark.plans.pipeline import etl_transform
+    from pulsar_elasticsearch_sync_rs_spark.sources.batch import normalize_events_ts
+    from pulsar_elasticsearch_sync_rs_spark.streaming.metrics import (
+        LABEL_COLUMNS,
+        labeled_counts,
+    )
+
+    ts0 = 1_704_067_200 * 10**9  # 2024-01-01T00:00:00Z in ns
+    rows = []
+    for i in range(40):
+        props = {"k": 90 + i % 10 if i % 8 == 5 else i}  # k in 90..99: debug by pattern
+        if i % 5 >= 2:
+            props["app"] = f"a{i % 5 - 1}"  # a1, a2, a3: 8 rows each; 16 app-less rows
+        if i % 6 == 1:
+            props["level"] = "debug"
+        props.update({f"x{j}": j for j in range(i % 4)})
+        day = 1 if i % 3 == 0 else 0
+        rows.append(Row(event_id=i, ts=ts0 + (day * 86_400 + i) * 10**9, user_id=i,
+                        event_type="alpha" if i % 2 else "beta", value=1.0,
+                        props=json.dumps(props)))
+    ev = normalize_events_ts(spark.createDataFrame(rows))
+    records = ev.select(
+        "event_id", F.col("props").alias("value"),
+        F.concat(F.lit("persistent://public/default/"), F.col("event_type")).alias("topic"),
+        F.col("ts").alias("publish_time"), "user_id",
+    )
+    cfg = PipelineConfig(debug_log_patterns=(r'"k":\s*9\d\b',))
+    df = etl_transform(records, cfg, tiebreaker="event_id").select(*LABEL_COLUMNS).cache()
+    try:
+        got = labeled_counts(df.collect(), max_label_values=2)
+
+        n_debug = F.sum(F.col("is_debug").cast("int")).alias("nd")
+        want = {}
+        for r in df.groupBy("topic_short").agg(F.count("*").alias("n"), n_debug).collect():
+            labels = (("topic", r["topic_short"]),)
+            want[("pulsar_received_messages", labels)] = r["n"]
+            want[("pulsar_received_debug_messages", labels)] = r["nd"]
+        for r in df.groupBy("topic_short", "date_str").agg(
+            F.count("*").alias("n"), n_debug
+        ).collect():
+            labels = (("date", r["date_str"]), ("topic", r["topic_short"]))
+            want[("pulsar_received_messages_by_date", labels)] = r["n"]
+            want[("pulsar_received_debug_messages_by_date", labels)] = r["nd"]
+
+        def folded(col):
+            top = [
+                r[col]
+                for r in df.groupBy(col).count()
+                .orderBy(F.desc("count"), F.asc(col)).limit(2).collect()
+            ]
+            return F.when(F.col(col).isin(top), F.col(col)).otherwise(F.lit("__OTHER__"))
+
+        want_gauges = {
+            (r["i"], r["a"]): r["g"]
+            for r in df.groupBy(folded("index").alias("i"), folded("app").alias("a"))
+            .agg(F.avg("n_fields").alias("g")).collect()
+        }
+        n_debug_rows = df.filter(F.col("is_debug")).count()
+    finally:
+        df.unpersist()
+
+    assert {(n, tuple(sorted(lb.items()))): v for n, v, lb in got.counters} == want
+    assert len({lb["topic"] for _, _, lb in got.counters}) == 2
+    assert len({lb["date"] for _, _, lb in got.counters if "date" in lb}) == 2
+    assert n_debug_rows == 10  # 7 by level, 5 by pattern, 2 of them both
+    gauges = {(lb["index"], lb["app"]): v for _, v, lb in got.gauges}
+    assert gauges.keys() == want_gauges.keys()
+    for key, v in gauges.items():
+        assert abs(v - want_gauges[key]) <= 1e-9, key
+    apps = {a for _, a in gauges}
+    assert {"__DEFAULT_APP__", "__OTHER__"} <= apps
+    assert "__OTHER__" in {i for i, _ in gauges}
+
+
+def test_prometheus_label_values_are_escaped():
+    """A label value carrying a quote, a newline or a backslash renders
+    escaped (text format 0.0.4): each series stays on one line, and a
+    log payload's ``app`` cannot forge a series."""
+    registry = MetricsRegistry()
+    forged = 'x"} 1\nes_write_success{index="fake"} 999\n#\\'
+    registry.set_gauge("es_index_doc_fields", 12.0, index="i", app=forged)
+    registry.inc("pulsar_received_messages", 3, topic="t")
+    lines = registry.render_prometheus(include_process=False).splitlines()
+    assert len(lines) == 2
+    assert not any(line.startswith("es_write_success") for line in lines)
+    assert lines[1] == (
+        'es_index_doc_fields{app="x\\"} 1\\nes_write_success{index=\\"fake\\"} 999'
+        '\\n#\\\\",index="i"} 12.0'
+    )
+
+
 def test_stateful_rate_limit_across_batches(spark, tmpdir):
     """The per-(app, second) admission count persists across
     micro-batches: 2 batches × 3 records in the same second for app a
