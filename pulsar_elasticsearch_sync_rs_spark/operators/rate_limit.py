@@ -13,12 +13,16 @@ Spark-first design:
   ``(app, second)``, which at 100 TB is well-distributed because the
   second bucket rotates; a single hot app does NOT hot-spot a single
   reducer the way ``PARTITION BY app`` alone would.
-- streaming variant: per-micro-batch application of the same window
-  (see ``streaming/rate_limit_state.py`` for the stateful
+- streaming variant: per-micro-batch application of the same contract
+  on the driver (:func:`keep_mask`, over the rows the ETL runner
+  collects for the bulk sink anyway — no plan, no shuffle, no job;
+  see ``streaming/rate_limit_state.py`` for the stateful
   ``applyInPandasWithState`` carry-across-batches variant).
 """
 
 from __future__ import annotations
+
+from collections import defaultdict
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -79,6 +83,38 @@ def rate_limit_per_second(
         .filter(F.col("__rl_limit").isNull() | (F.col("__rl_rn") <= F.col("__rl_limit")))
         .drop("__rl_limit", "__rl_rn")
     )
+
+
+def _nulls_first(value) -> tuple:
+    return (0, 0) if value is None else (1, value)
+
+
+def keep_mask(rows, limits: dict[str, int]) -> list[bool]:
+    """:func:`rate_limit_per_second` over collected rows, on the driver:
+    ``rows`` are ``(app, unix_micros(ts), tiebreaker)`` triples, and the
+    result says which rows the window keeps. Per (app, floor-second) the
+    first ``limits[app]`` rows by (ts, tiebreaker) ascending, nulls
+    first, are kept; NULL and unconfigured apps pass through, and a NULL
+    ts is one group of its own per app, as ``date_trunc`` of NULL is.
+    Python's ``//`` floors toward -inf like ``date_trunc('second')``,
+    so pre-1970 seconds split where Spark splits them. Rows tied on
+    both keys keep their collected order (Spark's ``row_number`` picks
+    any)."""
+    keep = [True] * len(rows)
+    if not limits:
+        return keep
+    groups: dict[tuple, list[int]] = defaultdict(list)
+    for pos, (app, ts_us, _) in enumerate(rows):
+        if app is not None and app in limits:
+            groups[(app, None if ts_us is None else ts_us // 1_000_000)].append(pos)
+    for (app, _), members in groups.items():
+        n = max(int(limits[app]), 0)
+        if len(members) <= n:
+            continue
+        members.sort(key=lambda p: (_nulls_first(rows[p][1]), _nulls_first(rows[p][2])))
+        for pos in members[n:]:
+            keep[pos] = False
+    return keep
 
 
 def rate_limit_gcra(

@@ -9,12 +9,13 @@ endpoint (reference ``src/prometheus.rs:7-194``). Spark-natively:
   ``StreamingQueryListener`` collects each batch's observed values
   into an in-process registry;
 - the labeled counters and the field gauge come from
-  :func:`labeled_counts` over the rows of ONE narrow collect of the
-  persisted micro-batch, the same collect that feeds the K2 debug echo
-  (``runner.sink_fn``) — no second source scan, no aggregation job.
-  The driver holds six scalars per admitted row (plus the payloads of
-  debug-topic rows), bounded by source admission like the sink's
-  NDJSON;
+  :func:`labeled_counts` over the rows of the runner's ONE collect of
+  the micro-batch (``runner.sink_fn``), which also feeds the K2 debug
+  echo and, for the bulk sink, the rate limiter and the ``_bulk``
+  bodies — no second source scan, no aggregation job. The counters
+  add six scalars per admitted row (plus the payloads of debug-topic
+  rows) to what the driver holds, bounded by source admission like
+  the sink's NDJSON;
 - text exposition renders the registry in Prometheus format (the
   cluster deployment would instead flip
   ``spark.ui.prometheus.enabled=true`` and scrape the driver; this

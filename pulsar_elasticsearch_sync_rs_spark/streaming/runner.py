@@ -33,6 +33,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pulsar_elasticsearch_sync_rs_spark.config import PipelineConfig
+from pulsar_elasticsearch_sync_rs_spark.operators.rate_limit import (
+    keep_mask,
+    rate_limit_per_second,
+)
 from pulsar_elasticsearch_sync_rs_spark.plans.pipeline import etl_transform
 from pulsar_elasticsearch_sync_rs_spark.streaming.metrics import (
     LABEL_COLUMNS,
@@ -125,19 +129,27 @@ def pulsar_reader_options(cfg: PipelineConfig) -> dict[str, str]:
     return opts
 
 
+def pulsar_records(df: DataFrame) -> DataFrame:
+    """The pulsar-spark connector's columns as the chain's record schema
+    (value, topic, publish_time, event_id): the payload bytes as UTF-8
+    text (S2), and the connector's message id, as hex, for ``event_id``,
+    the rate limiter's tiebreaker between same-timestamp messages."""
+    return df.select(
+        F.col("value").cast("string").alias("value"),
+        F.col("__topic").alias("topic"),
+        F.col("__publishTime").alias("publish_time"),
+        F.hex("__messageId").alias("event_id"),
+    )
+
+
 def read_pulsar_stream(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     """Real-source lane (S1): StreamNative pulsar-spark connector.
     Requires the connector jar on the classpath (absent here; the
-    file-source lane above is behaviorally equivalent for the chain)."""
-    return (
-        spark.readStream.format("pulsar")
-        .options(**pulsar_reader_options(cfg))
-        .load()
-        .select(
-            F.col("value").cast("string").alias("value"),  # S2 bytes→utf8
-            F.col("__topic").alias("topic"),
-            F.col("__publishTime").alias("publish_time"),
-        )
+    file-source lane above is behaviorally equivalent for the chain,
+    and :func:`pulsar_records` is tested on a file stream carrying the
+    connector's columns)."""
+    return pulsar_records(
+        spark.readStream.format("pulsar").options(**pulsar_reader_options(cfg)).load()
     )
 
 
@@ -155,12 +167,27 @@ def run_pipeline_stream(
     """Build and start the streaming query: chain → foreachBatch bulk
     sink. Returns the StreamingQuery (caller awaits termination).
 
-    R1 note: the windowed row_number cap is a batch operator (Spark
-    disallows non-time windows on streaming plans), so the limiter is
-    applied INSIDE foreachBatch to each micro-batch — a per-flush-window
-    cap, which is the reference's observable granularity (its buffers
-    flush every ``flush_interval``). The exact cross-batch variant is
-    ``streaming/rate_limit_state.rate_limit_stream``.
+    One Spark job per micro-batch, like the reference's single sink
+    loop that groups, limits, counts and posts each buffer in one pass
+    (``src/es.rs:319-378``): when ``transport`` has
+    ``payload_columns``/``post`` (``EsBulkTransport``), the callback
+    collects the label columns, the K2 echo column, the limiter's keys
+    and the transport's payload in ONE narrow collect, derives the G3
+    counters, the echo sample and the R1 keep mask on the driver, and
+    posts the kept rows. A DataFrame transport (``write(df, batch_id)``)
+    gets one accounting collect and the Spark-side limiter instead.
+
+    R1 note: the rate limit caps each micro-batch on its own, a
+    per-flush-window cap, which is the reference's observable
+    granularity (its buffers flush every ``flush_interval``); Spark
+    disallows the batch operator's non-time window on streaming plans,
+    so it runs inside ``foreachBatch``, on the driver for the bulk sink
+    (``operators/rate_limit.keep_mask``). The exact cross-batch variant
+    is ``streaming/rate_limit_state.rate_limit_stream``.
+
+    K3 (``debug_files_dir`` with ``inject_key``) writes the pre-limit
+    batch, as the reference writes its debug files in the consume loop
+    (``src/pulsar.rs:290-300``), ahead of its sink-side limiter.
     """
     import dataclasses
 
@@ -180,43 +207,46 @@ def run_pipeline_stream(
             F.sum(F.when(F.col("is_debug"), 1).otherwise(0)).alias("consumed_debug"),
             F.avg("n_fields").alias("avg_fields"),
         )
-    # G3 labeled counters and the K2 echo share ONE narrow collect of
-    # the pre-limit batch: the reference counts and echoes at consume
-    # time (src/pulsar.rs:256-262), before its sink-side limiter
-    # (src/es.rs:359-373)
+    # G3 labeled counters and the K2 echo read the pre-limit batch: the
+    # reference counts and echoes at consume time (src/pulsar.rs:256-262),
+    # before its sink-side limiter (src/es.rs:359-373)
     accounting = [*LABEL_COLUMNS, echo_column(cfg.debug_topics)]
-    needs_rows = bool(cfg.debug_topics) or registry is not None
+    driver_sink = hasattr(transport, "payload_columns") and hasattr(transport, "post")
+    payload = transport.payload_columns() if driver_sink else []
+    if driver_sink:
+        # the limiter's keys, then the payload (sliced off the row's end)
+        accounting += [
+            F.unix_micros("publish_time").alias("__ts_us"),
+            F.col("event_id").alias("__tb"),
+            *payload,
+        ]
+    needs_rows = driver_sink or bool(cfg.debug_topics) or registry is not None
     needs_files = bool(cfg.inject_key and debug_files_dir)
-    # more than one consumer of the micro-batch → persist once instead
+    # passes over the micro-batch: K3's write, the collect, and a
+    # DataFrame transport's write; more than one → persist once instead
     # of recomputing the chain per pass
-    multi_pass = needs_rows or needs_files
+    multi_pass = needs_files + needs_rows + (not driver_sink) > 1
 
     def sink_fn(batch_df, batch_id):
-        raw = batch_df  # persist handle (batch_df is rebound below)
         if multi_pass:
-            raw.persist()
+            batch_df.persist()
         try:
-            counts = None
-            if needs_rows:
-                rows = batch_df.select(*accounting).collect()
-                if registry is not None:
-                    counts = labeled_counts(rows)
-                echo_debug_rows(rows)
-            if cfg.rate_limits:
-                from pulsar_elasticsearch_sync_rs_spark.operators.rate_limit import (
-                    rate_limit_per_second,
-                )
-
-                batch_df = rate_limit_per_second(
-                    batch_df,
-                    cfg.rate_limits,
-                    app="app",
-                    ts="publish_time",
-                    tiebreaker="event_id",
-                )
             if needs_files:
                 write_debug_files(batch_df, debug_files_dir)  # K3
-            transport.write(batch_df, batch_id)
+            rows = batch_df.select(*accounting).collect() if needs_rows else []
+            counts = labeled_counts(rows) if registry is not None else None
+            if cfg.debug_topics:
+                echo_debug_rows(rows)
+            if driver_sink:
+                keys = [(r["app"], r["__ts_us"], r["__tb"]) for r in rows]
+                keep = keep_mask(keys, cfg.rate_limits)
+                transport.post([r[-len(payload) :] for r, k in zip(rows, keep) if k], batch_id)
+            else:
+                limited = rate_limit_per_second(
+                    batch_df, cfg.rate_limits, app="app", ts="publish_time",
+                    tiebreaker="event_id",
+                )
+                transport.write(limited, batch_id)
             # fold only once the batch is delivered: a sink that raises
             # (strict bulk rejection) makes the checkpoint replay this
             # batch, which would otherwise count it twice
@@ -224,7 +254,7 @@ def run_pipeline_stream(
                 fold_labeled_counters(registry, counts)
         finally:
             if multi_pass:
-                raw.unpersist()
+                batch_df.unpersist()
     writer = (
         out.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)

@@ -9,12 +9,12 @@
 - K4: Prometheus text exposition over HTTP (reference warp server on
   :3030, ``src/prometheus.rs:157-194``).
 
-Spark-first: K2/K3 run inside the same foreachBatch over the persisted
-micro-batch — no second source scan, no extra shuffle. K2 reads the
-echo column of the runner's one narrow collect, which also feeds the
-labeled counters (``metrics.labeled_counts``); K3's text write
-partitions by the already-computed topic column. K4 serves the
-in-process registry.
+Spark-first: K2/K3 run inside the runner's foreachBatch over the
+pre-rate-limit micro-batch (persisted when K3 makes it a second pass)
+— no second source scan, no extra shuffle. K2 reads the echo column
+of the runner's one collect, which also feeds the labeled counters
+(``metrics.labeled_counts``); K3's text write partitions by the
+already-computed topic column. K4 serves the in-process registry.
 """
 
 from __future__ import annotations

@@ -14,14 +14,17 @@ bulk transport:
   from the driver inside the ``foreachBatch`` callback like the
   reference's single sink loop; the NDJSON lines are built JVM-side
   and collected in one job, so the per-batch path starts no Python
-  worker. Unlike the reference (ack-before-write, at-most-once, no
-  retry — ``src/pulsar.rs:227-232``, ``src/es.rs:165``), checkpointed
+  worker. The ETL runner folds that collect into its own, the one
+  Spark job of an ETL micro-batch (``runner.run_pipeline_stream``).
+  Unlike the reference (ack-before-write, at-most-once, no retry —
+  ``src/pulsar.rs:227-232``, ``src/es.rs:165``), checkpointed
   foreachBatch gives at-least-once; documents carry no _id, matching
   the reference's auto-id behavior.
 
 Scale: the partitionBy write shuffles nothing (dynamic partition write
 is a per-task file split). The ES transport holds one micro-batch of
-NDJSON on the driver (about 1.1 MB per 1,000 log-sized docs); source
+NDJSON on the driver (about 1.1 MB per 1,000 log-sized docs; under the
+runner, the rows its rate limiter drops are collected too); source
 admission (``maxEntriesPerTrigger`` / ``maxFilesPerTrigger``) bounds
 that batch, the port's equivalent of the reference's bounded channel
 (X1), and the body is cut into ``buffer_size``-doc bulk calls, exactly
@@ -33,7 +36,8 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 @dataclass
@@ -90,6 +94,12 @@ class EsBulkTransport:
     import-cache invalidation), more than the whole send of a
     log-sized micro-batch.
 
+    ``write`` is the two halves in one call: collect
+    :meth:`payload_columns`, then :meth:`post` the rows. The ETL runner
+    calls the halves itself: it collects the payload in the same job as
+    its accounting and rate-limit columns, and posts the rows its
+    driver-side limiter keeps.
+
     Memory bound: the driver holds one micro-batch of NDJSON, about
     1.1 KB per log-sized doc. Source admission bounds the batch —
     ``maxEntriesPerTrigger = cfg.batch_size`` for the pulsar source
@@ -127,22 +137,30 @@ class EsBulkTransport:
     id_col: str | None = None
     last_stats: dict = field(default_factory=dict, compare=False)
 
-    def write(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        # NDJSON action+doc lines are built JVM-side (to_json/concat run
-        # in whole-stage codegen): the reference serializes in-process
-        # (src/es.rs:129-191). Python below only joins lines and POSTs.
+    def payload_columns(self) -> list[Column]:
+        """The two columns :meth:`post` reads, built JVM-side (to_json
+        and concat run in whole-stage codegen; the reference serializes
+        in-process, src/es.rs:129-191): ``__idx``, the routing index,
+        and ``__line``, the action line (with ``_id`` when ``id_col`` is
+        set), a newline and the doc."""
         meta = [F.col(self.index_col).alias("_index")]
         if self.id_col is not None:
             meta.append(F.col(self.id_col).cast("string").alias("_id"))
         action = F.to_json(F.struct(F.struct(*meta).alias("index")))
         doc = F.coalesce(F.to_json(F.col(self.doc_col)), F.lit("{}"))
-        rows = batch_df.select(
+        return [
             F.col(self.index_col).alias("__idx"),
             F.concat(action, F.lit("\n"), doc).alias("__line"),
-        ).collect()
+        ]
 
+    def write(self, batch_df: DataFrame, batch_id: int) -> None:
+        """Collect the batch's :meth:`payload_columns` (one job) and
+        :meth:`post` them."""
+        self.post(batch_df.select(*self.payload_columns()).collect(), batch_id)
+
+    def post(self, rows, batch_id: int) -> None:
+        """POST ``(__idx, __line)`` rows in order as ``buffer_size``-action
+        bodies, then fold the per-index results into ``registry``."""
         stats: dict[str, list[int]] = {}
         for start in range(0, len(rows), self.buffer_size):
             self._post(rows[start : start + self.buffer_size], stats)

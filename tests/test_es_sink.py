@@ -9,7 +9,9 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from pulsar_elasticsearch_sync_rs_spark.streaming.sink import EsBulkTransport
 
@@ -406,3 +408,146 @@ def test_strict_replay_folds_labeled_counters_once(spark, tmpdir):
     finally:
         server.shutdown()
         server.server_close()
+
+
+def _etl_source(spark, src_dir: str, files: list[list[tuple]]) -> None:
+    """One parquet file per micro-batch of ``(event_id, ts_ns, app)``
+    records on topic ``t``; each payload carries its ``eid``."""
+    for recs in files:
+        rows = [
+            Row(event_id=eid, ts=ts, user_id=eid, event_type="t", value=1.0,
+                props=json.dumps({"app": app, "eid": eid}))
+            for eid, ts, app in recs
+        ]
+        spark.createDataFrame(rows).coalesce(1).write.mode("append").parquet(src_dir)
+
+
+def _posted_eids(payloads: list[bytes]) -> list[int]:
+    return [
+        int(json.loads(line)["eid"])
+        for payload in payloads
+        for line in payload.decode().strip().split("\n")[1::2]
+    ]
+
+
+@pytest.mark.parametrize("rate_limits", [{"a1": 1}, {}])
+def test_es_micro_batch_is_one_spark_job(spark, tmpdir, rate_limits):
+    """The runner's bulk path is the reference's single sink loop: each
+    micro-batch into ``EsBulkTransport`` runs exactly ONE Spark job (the
+    collect that feeds the labeled counters, the K2 echo, the driver-side
+    rate limiter and the ``_bulk`` bodies), with or without limits, and
+    ``observe("etl_metrics")`` still reaches its listener. The docs
+    posted are exactly the rows ``rate_limit_per_second`` keeps:
+    five same-second records per batch, the first two sharing a
+    timestamp with event ids against arrival order (so the tiebreaker
+    picks the one kept under a 1/s cap), one unconfigured app."""
+    import os
+
+    from pulsar_elasticsearch_sync_rs_spark.config import PipelineConfig
+    from pulsar_elasticsearch_sync_rs_spark.plans.pipeline import etl_transform
+    from pulsar_elasticsearch_sync_rs_spark.sources.batch import normalize_events_ts
+    from pulsar_elasticsearch_sync_rs_spark.streaming.metrics import (
+        MetricsRegistry,
+        ObservedMetricsListener,
+    )
+    from pulsar_elasticsearch_sync_rs_spark.streaming.runner import (
+        read_events_stream,
+        run_pipeline_stream,
+    )
+
+    src_dir = os.path.join(tmpdir, "src")
+    ts0 = 1_704_067_200 * 10**9  # 2024-01-01T00:00:00Z in ns
+    _etl_source(spark, src_dir, [
+        [(f * 10 + 4 - i, ts0 + f * 10**9 + (i // 2) * 1000, "a2" if i == 4 else "a1")
+         for i in range(5)]
+        for f in range(4)
+    ])
+    cfg = PipelineConfig(debug_topics=("t",), rate_limits=rate_limits)
+    captured.clear()
+    server = ThreadingHTTPServer(("127.0.0.1", 0), _BulkCapture)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    registry = MetricsRegistry()
+    listener = ObservedMetricsListener(registry)
+    spark.streams.addListener(listener)
+    try:
+        transport = EsBulkTransport(
+            es_url=f"http://127.0.0.1:{server.server_address[1]}", registry=registry
+        )
+        q = run_pipeline_stream(
+            spark, cfg, read_events_stream(spark, src_dir, max_files_per_trigger=1),
+            transport, os.path.join(tmpdir, "ckpt"), available_now=True, registry=registry,
+        )
+        q.awaitTermination(120)
+        posted = _posted_eids(captured)
+        sc = spark.sparkContext
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+        server.shutdown()
+        server.server_close()
+
+    batches = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert len(batches) == 4
+    assert len(sc.statusTracker().getJobIdsForGroup(str(q.runId))) == len(batches)
+
+    ev = normalize_events_ts(spark.read.parquet(src_dir))
+    records = ev.select(
+        "event_id", F.col("props").alias("value"),
+        F.concat(F.lit("persistent://public/default/"), F.col("event_type")).alias("topic"),
+        F.col("ts").alias("publish_time"),
+    )
+    kept = [r["event_id"] for r in etl_transform(records, cfg).select("event_id").collect()]
+    assert len(kept) == (8 if rate_limits else 20)
+    assert sorted(posted) == sorted(kept)
+    assert registry.get("pulsar_received_messages", topic="t") == 20
+    assert registry.get("pulsar_received_messages") == 20  # observe("etl_metrics")
+    assert sum(ok for ok, _ in transport.last_stats.values()) == len(kept) // 4
+
+
+@pytest.mark.parametrize("sink", ["es", "parquet"])
+def test_debug_files_read_the_pre_limit_batch(spark, tmpdir, sink):
+    """K3 writes every record the batch consumed, before the rate limiter
+    (the reference writes its debug files in the consume loop,
+    src/pulsar.rs:290-300, ahead of its sink-side limiter): four
+    same-second records of one app capped at 1/s give four
+    ``topic|publish_ms|date|payload`` lines and one delivered doc, for
+    the bulk transport and for a DataFrame transport alike."""
+    import os
+
+    from pulsar_elasticsearch_sync_rs_spark.config import PipelineConfig
+    from pulsar_elasticsearch_sync_rs_spark.streaming.runner import (
+        read_events_stream,
+        run_pipeline_stream,
+    )
+    from pulsar_elasticsearch_sync_rs_spark.streaming.sink import ParquetBulkTransport
+
+    src_dir = os.path.join(tmpdir, "src")
+    ts0 = 1_704_067_200 * 10**9  # 2024-01-01T00:00:00Z in ns
+    _etl_source(spark, src_dir, [[(i, ts0 + i * 1000, "a1") for i in range(4)]])
+    debug_dir = os.path.join(tmpdir, "debug")
+    out_dir = os.path.join(tmpdir, "out")
+    cfg = PipelineConfig(inject_key=True, rate_limits={"a1": 1})
+    captured.clear()
+    server = ThreadingHTTPServer(("127.0.0.1", 0), _BulkCapture)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    try:
+        if sink == "es":
+            transport = EsBulkTransport(es_url=f"http://127.0.0.1:{server.server_address[1]}")
+        else:
+            transport = ParquetBulkTransport(out_dir)
+        q = run_pipeline_stream(
+            spark, cfg, read_events_stream(spark, src_dir), transport,
+            os.path.join(tmpdir, "ckpt"), available_now=True, debug_files_dir=debug_dir,
+        )
+        q.awaitTermination(120)
+    finally:
+        server.shutdown()
+        server.server_close()
+
+    lines = sorted(r["value"] for r in spark.read.text(debug_dir).collect())
+    assert len(lines) == 4
+    assert all(line.startswith("t|1704067200000|2024.01.01|{") for line in lines)
+    if sink == "es":
+        assert _posted_eids(captured) == [0]
+    else:
+        assert [r["event_id"] for r in spark.read.parquet(out_dir).collect()] == [0]

@@ -3,6 +3,9 @@ uuid injection, grouping) on small inline frames."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -22,7 +25,10 @@ from pulsar_elasticsearch_sync_rs_spark.operators.filters import (
     filter_namespace_regex,
     filter_non_empty,
 )
-from pulsar_elasticsearch_sync_rs_spark.operators.rate_limit import rate_limit_per_second
+from pulsar_elasticsearch_sync_rs_spark.operators.rate_limit import (
+    keep_mask,
+    rate_limit_per_second,
+)
 from pulsar_elasticsearch_sync_rs_spark.plans.pipeline import etl_transform
 
 
@@ -89,6 +95,51 @@ def test_rate_limit_cap(spark):
     got = sorted(r["event_id"] for r in kept.collect())
     # app a: first 2 of second 0 (ids 0,1) + id 8 in next second; app b: all
     assert got == [0, 1, 5, 6, 7, 8]
+
+
+
+@pytest.mark.parametrize("tiebreaker_type", ["long", "string"])
+def test_keep_mask_matches_rate_limit_per_second(spark, tiebreaker_type):
+    """The driver limiter keeps exactly the rows the Spark window keeps,
+    through both limit lookups (CASE chain and broadcast join), over 20
+    seeded random trials of 12 rows each: NULL apps and NULL timestamps,
+    an unconfigured app, limits 0-3 so bursts overflow, seconds around
+    the epoch (-1.5 s included, where flooring and truncating toward
+    zero disagree), and timestamps shared within a second so the
+    tiebreaker decides. Tiebreakers are distinct (one NULL per trial),
+    so no two rows tie on both keys; string ones vary in length, so
+    their order is not numeric."""
+    rng = random.Random(17)
+    rows, limits = [], {}
+    for trial in range(20):
+        apps = [f"{trial}a", f"{trial}b"]
+        limits.update({a: rng.randint(0, 3) for a in apps})
+        stamps = [None, -1_500_000] + [
+            sec * 1_000_000 + rng.choice((0, 1, 500_000, 999_999)) for sec in (-2, -1, 0, 1)
+        ]
+        ids = rng.sample(range(1, 5000), 12)
+        null_tb = rng.randrange(12)
+        for k in range(12):
+            tb = None if k == null_tb else ids[k]
+            if tb is not None and tiebreaker_type == "string":
+                tb = format(tb, "X")
+            app = rng.choice([*apps, apps[0], f"{trial}c", None])
+            rows.append((len(rows), app, rng.choice(stamps), tb))
+    df = spark.createDataFrame(
+        rows, f"rid long, app string, ts_us long, event_id {tiebreaker_type}"
+    ).withColumn("ts", F.timestamp_micros("ts_us"))
+
+    mask = keep_mask([(app, ts_us, tb) for _, app, ts_us, tb in rows], limits)
+    want = {rid for (rid, *_), k in zip(rows, mask) if k}
+    assert 0 < len(want) < len(rows)
+    assert any(app is None for _, app, _, _ in rows)
+    assert any(ts is None for _, app, ts, _ in rows if app in limits)
+    for threshold in (10**9, 0):
+        kept = rate_limit_per_second(
+            df, limits, app="app", ts="ts", tiebreaker="event_id",
+            broadcast_threshold=threshold,
+        )
+        assert {r["rid"] for r in kept.select("rid").collect()} == want, threshold
 
 
 def test_rate_limit_broadcast_lane(spark):

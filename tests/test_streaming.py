@@ -3194,3 +3194,53 @@ def test_cdc_census_growth_is_per_bucket_positive_deltas():
     # a bucket absent from pre (first touch) counts fully as growth
     s._absorb({2: 2}, {})
     assert s.last_batch_growth == 2 and s.orphan_tombstones == 2
+
+
+def test_pulsar_connector_columns_run_through_the_runner(spark, tmpdir):
+    """S1: a stream carrying the pulsar-spark connector's columns
+    (``value`` bytes, ``__topic``, ``__publishTime``, ``__messageId``
+    bytes), projected by ``pulsar_records`` as ``read_pulsar_stream``
+    does, runs through the whole runner. The hex message id is the
+    rate limiter's tiebreaker: of three same-timestamp messages under a
+    2/s cap, the two lowest ids ("0100" and "02") are kept whatever
+    their arrival order; an unconfigured app passes."""
+    import datetime
+    import json
+
+    from pulsar_elasticsearch_sync_rs_spark.streaming.runner import pulsar_records
+
+    src_dir = os.path.join(tmpdir, "src")
+    t0 = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
+    topic = "persistent://public/default/orders-partition-1"
+    msgs = [
+        ({"app": "a1", "k": 0}, t0, b"\x0a"),
+        ({"app": "a1", "k": 1}, t0, b"\x02"),
+        ({"app": "a1", "k": 2}, t0, b"\x01\x00"),
+        ({"app": "a2", "k": 3}, t0, b"\x03"),
+        ({"app": "a1", "k": 4}, t0 + datetime.timedelta(seconds=1), b"\x09"),
+    ]
+    schema = "value binary, __topic string, __publishTime timestamp, __messageId binary"
+    spark.createDataFrame(
+        [(bytearray(json.dumps(p).encode()), topic, ts, bytearray(mid)) for p, ts, mid in msgs],
+        schema,
+    ).coalesce(1).write.parquet(src_dir)
+    out_dir = os.path.join(tmpdir, "out")
+    source = pulsar_records(spark.readStream.schema(schema).parquet(src_dir))
+    registry = MetricsRegistry()
+    q = run_pipeline_stream(
+        spark, PipelineConfig(rate_limits={"a1": 2}), source, ParquetBulkTransport(out_dir),
+        os.path.join(tmpdir, "ckpt"), available_now=True, registry=registry,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    got = {
+        r["event_id"]: (r["index"], r["doc"]["k"])
+        for r in spark.read.parquet(out_dir).collect()
+    }
+    assert got == {
+        "0100": ("orders-2024.01.01", "2"),
+        "02": ("orders-2024.01.01", "1"),
+        "03": ("orders-2024.01.01", "3"),
+        "09": ("orders-2024.01.01", "4"),
+    }
+    assert registry.get("pulsar_received_messages", topic="orders-partition-1") == 5
