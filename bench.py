@@ -143,7 +143,7 @@ PLAN_PINS: dict[str, dict] = {
     "q_substring_dedup": {"arrow_max": 0},  # md5 grams + windows, pure JVM
     "q_bm25_topk": {"arrow_max": 0},  # tokenize/agg/joins all JVM; the ≤5-element sum is an interpreted HOF, not Arrow
     "q_media_jpeg_prog": {"arrow_max": 2},  # synth corpus + decode: exactly two MapInPandas
-    "q_epoch_shuffle": {"arrow_max": 0, "window_free": True},  # pure JVM (monotonic-id rank + broadcast offsets); a Window node here is the single-partition regression
+    "q_epoch_shuffle": {"arrow_max": 0, "window_free": True},  # pure JVM (monotonic-id rank + folded literal offsets); a Window node here is the single-partition regression
     "q_interleave_mix": {"arrow_max": 0, "window_free": True},  # one global_index pass + closed-form positions — same no-window contract as q_epoch_shuffle
     "q_epoch_two_level": {"arrow_max": 0},  # one bounded per-block window is expected; no Arrow crossing anywhere
     "q_pack_bins_mixed": {"arrow_max": 0, "window_free": True},  # rank arithmetic end-to-end; a per-class window here is the mega-class skew regression

@@ -15,11 +15,28 @@ codegen; nothing here drops to Python per row.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 DEFAULT_APP = "__DEFAULT_APP__"  # reference src/es.rs:350-351
+
+
+def json_literal(value, ddl: str) -> Column:
+    """A driver-computed list or dict as one plan constant of type
+    ``ddl`` (e.g. ``"array<bigint>"``, ``"map<string,int>"``).
+
+    ConstantFolding evaluates the ``from_json`` of a string literal
+    once, at optimization, so the plan holds a single array or map
+    ``Literal``: no join, no broadcast-build job, and no parse per row
+    (pinned by ``tests/test_operators.py::test_json_literal_folds``).
+    Building it costs one py4j call at any size (about 2 ms for 4096
+    entries, where an ``F.array`` of per-element ``F.lit`` takes about
+    3 ms per element). A large literal rides in the stage's task
+    binary, which Spark broadcasts once per stage."""
+    return F.from_json(F.lit(json.dumps(value)), ddl)
 
 
 def parse_json_map(raw: Column | str) -> Column:

@@ -20,11 +20,12 @@ but staying in DataFrame/Arrow land:
   3. one PURE-JVM projection that adds ``offset[partition] +
      local_rank`` — ``monotonically_increasing_id()`` over the
      materialized sorted partitions encodes the within-partition rank
-     in its low 33 bits, and the per-partition offsets ride a
-     broadcast join — no Arrow crossing, no further shuffle, no
-     window. (The first cut of this operator assigned positions in a
-     ``mapInPandas`` pass; at 60M rows the Arrow round-trip WAS the
-     wall — 42.9 s vs 6.6 s for this plan, SCALE.md round-12 table.)
+     in its low 33 bits, and the per-partition offsets ride one
+     folded literal array — no Arrow crossing, no join, no further
+     shuffle, no window. (The first cut of this operator assigned
+     positions in a ``mapInPandas`` pass; at 60M rows the Arrow
+     round-trip WAS the wall — 42.9 s vs 6.6 s for this plan, SCALE.md
+     round-12 table.)
 
 The sorted frame is lazily ``localCheckpoint``-ed so the range sort is
 paid ONCE, not re-executed by the counting job (the per-call persist
@@ -47,6 +48,7 @@ from functools import lru_cache as _lru_cache
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pulsar_elasticsearch_sync_rs_spark.functions.json_fns import json_literal
 from pulsar_elasticsearch_sync_rs_spark.session import batch_partitions
 
 # monotonically_increasing_id(): partition id in the upper 31 bits,
@@ -78,47 +80,26 @@ def _murmur3_int32(x: int, seed: int = 42) -> int:
     return h1 - (1 << 32) if h1 >= (1 << 31) else h1
 
 
-# driver-known per-partition offsets attach as a folded literal-array
-# lookup (one expression, no join, no broadcast-build job) up to this
-# partition count; beyond it, a broadcast join keeps the plan bounded
-_OFFSET_ARRAY_MAX_PARTS = 4096
-
-
 def _attach_offsets(with_ids, off_rows, n_parts, out_col, start_acc):
     """(__pid, __mid) frame + driver-side [(pid, offset)] → frame with
-    ``out_col`` = offset[pid] + within-partition rank. Offsets attach
-    as ``element_at(<literal array>, __pid + 1)`` — Catalyst folds the
-    array of driver ints into ONE literal, so no broadcast-build job
-    and no join node per call (optimization round 16; measured: the
-    createDataFrame broadcast build was one full job per
-    global_index/prefix-sum call). Gaps (empty partitions) carry the
-    running offset — no row holds such a pid, any value is unread.
-    Above ``_OFFSET_ARRAY_MAX_PARTS`` partitions, falls back to the
-    broadcast join (an offset array in the plan stays bounded)."""
+    ``out_col`` = offset[pid] + within-partition rank. The offsets
+    attach as ``element_at(<literal array>, __pid + 1)`` over one
+    :func:`json_literal` array, at any partition count: no join node
+    and no broadcast-build job per call. Gaps (empty partitions) carry
+    the running offset; no row holds such a pid, so the value is
+    unread."""
     local_rank = F.col("__mid") - (
         F.col("__pid").cast("long") * F.lit(_MID_PARTITION_STRIDE)
     )
-    if n_parts <= _OFFSET_ARRAY_MAX_PARTS:
-        by_pid = dict(off_rows)
-        fill, acc_fill = [], int(start_acc)
-        for p in range(n_parts):
-            acc_fill = by_pid.get(p, acc_fill)
-            fill.append(acc_fill)
-        arr = F.array(*[F.lit(int(v)).cast("long") for v in fill])
-        return (
-            with_ids.withColumn(
-                out_col,
-                F.element_at(arr, F.col("__pid") + F.lit(1)) + local_rank,
-            )
-            .drop("__pid", "__mid")
-        )
-    spark = with_ids.sparkSession
-    offs = spark.createDataFrame(off_rows, "__pid int, __off long")
-    return (
-        with_ids.join(F.broadcast(offs), "__pid")
-        .withColumn(out_col, F.col("__off") + local_rank)
-        .drop("__pid", "__mid", "__off")
-    )
+    by_pid = dict(off_rows)
+    fill, acc_fill = [], int(start_acc)
+    for p in range(n_parts):
+        acc_fill = by_pid.get(p, acc_fill)
+        fill.append(acc_fill)
+    arr = json_literal(fill, "array<bigint>")
+    return with_ids.withColumn(
+        out_col, F.element_at(arr, F.col("__pid") + F.lit(1)) + local_rank
+    ).drop("__pid", "__mid")
 
 
 @_lru_cache(maxsize=16)
@@ -167,8 +148,9 @@ def global_index(
 
     Scale: one range exchange (the sort every total order costs), one
     ≤ numPartitions-row count collect, one pure-JVM projection (the
-    offsets ride a broadcast join, so partition counts in the
-    hundreds of thousands stay fine — no giant CASE expression).
+    offsets ride one folded literal array, :func:`json_literal`, so
+    the plan shape is the same at every partition count; the pytest
+    pins 4097 partitions on both paths).
     Contrast with ``row_number().over(Window.orderBy(...))``, which
     plans a single partition holding the full dataset — the pytest
     pins this plan shape (no WindowExec).
@@ -236,8 +218,7 @@ def global_index(
                 "(reserved as an internal projection column)"
             )
     n_parts = int(num_partitions or batch_partitions(df.sparkSession))
-    spark = df.sparkSession
-    if uniform_long_range is not None and n_parts <= 4096:
+    if uniform_long_range is not None:
         if class_stats is not None:
             raise ValueError(
                 "global_index: uniform_long_range and class_stats are "
@@ -277,7 +258,8 @@ def global_index(
         if not off_rows:
             return df.withColumn(out_col, F.lit(None).cast("long"))
         pkeys = _hash_partition_keys(n_parts)
-        key_arr = F.array(*[F.lit(int(k)) for k in pkeys])
+        # array<int>: _hash_partition_keys predicts F.hash of an int
+        key_arr = json_literal(pkeys, "array<int>")
         placed = (
             df.withColumn(
                 "__bkey",
@@ -834,7 +816,7 @@ def epoch_shuffle_two_level(
     window anywhere — the within-block window partitions by block
     (≤ block_size rows each) and the block permutation is driver-side
     arithmetic over ≤ n_blocks keys (shared, cached, with the sharded
-    readers), shipped as a skinny broadcast frame.
+    readers), shipped as one folded literal array (:func:`json_literal`).
 
     Pass ``n`` (the corpus row count — the layout's `_meta.json`
     sidecar already knows it, see :func:`read_layout_meta`) and the
@@ -843,7 +825,7 @@ def epoch_shuffle_two_level(
     (round-14 VERDICT item 6; the pytest counts jobs)."""
     if int(block_size) < 1:
         raise ValueError("epoch_shuffle_two_level: block_size must be >= 1")
-    for reserved in ("__blk", "__wkey", "__within", "__brank"):
+    for reserved in ("__blk", "__wkey", "__within"):
         if reserved in df.columns:
             raise ValueError(
                 f"epoch_shuffle_two_level: column {reserved!r} already "
@@ -867,7 +849,7 @@ def epoch_shuffle_two_level(
         F.concat(F.lit(f"ep{int(epoch)}|"), F.col(id_col).cast("string"))
     )
     # block permutation: driver-side closed form (cached), shipped as a
-    # ≤ n_blocks-row broadcast — the same arithmetic the per-rank
+    # literal array of n_blocks ranks — the same arithmetic the per-rank
     # readers use, so metadata job and sharded reads agree by
     # construction (it previously rode a distributed global_index over
     # range(n_blocks) plus a .first() probe: two extra jobs per epoch)
@@ -887,33 +869,20 @@ def epoch_shuffle_two_level(
         .withColumn("__wkey", wkey)
         .withColumn("__within", within)
     )
-    if n_blocks <= _OFFSET_ARRAY_MAX_PARTS:
-        # ≤ a few thousand blocks: the brank map rides as ONE folded
-        # literal array (no broadcast-build job, no join node —
-        # optimization round 16, the _attach_offsets rationale); the
-        # 100 TB grain (~100k blocks) keeps the broadcast frame below
-        brank_col = F.element_at(
-            F.array(*[F.lit(int(v)).cast("long") for v in branks]),
-            F.col("__blk").cast("int") + F.lit(1),
-        )
-        offset = (brank_col * F.lit(r)) - F.when(
-            brank_col > short_rank, F.lit(deficit)
-        ).otherwise(F.lit(0))
-        return keyed.withColumn(
-            out_col, (offset + F.col("__within")).cast("long")
-        ).drop("__blk", "__wkey", "__within")
-    blocks = df.sparkSession.createDataFrame(
-        [(int(b), int(v)) for b, v in enumerate(branks)],
-        "__blk long, __brank long",
+    # the brank map rides as ONE folded literal array (no join, no
+    # broadcast-build job). At the 100 TB grain (~100k blocks) that
+    # literal rides in the stage's task binary, which Spark broadcasts
+    # once per stage
+    brank_col = F.element_at(
+        json_literal(branks, "array<bigint>"),
+        F.col("__blk").cast("int") + F.lit(1),
     )
-    offset = (F.col("__brank") * F.lit(r)) - F.when(
-        F.col("__brank") > short_rank, F.lit(deficit)
+    offset = (brank_col * F.lit(r)) - F.when(
+        brank_col > short_rank, F.lit(deficit)
     ).otherwise(F.lit(0))
-    return (
-        keyed.join(F.broadcast(blocks), "__blk")
-        .withColumn(out_col, (offset + F.col("__within")).cast("long"))
-        .drop("__blk", "__wkey", "__within", "__brank")
-    )
+    return keyed.withColumn(
+        out_col, (offset + F.col("__within")).cast("long")
+    ).drop("__blk", "__wkey", "__within")
 
 
 def persist_block_aligned(

@@ -31,7 +31,7 @@ the classic two-phase distributed scan instead:
    partition id — fully parallel;
 3. one tiny driver-side pass over the P partition totals (P = shuffle
    partitions, not data size) produces each partition's global offset,
-   broadcast-joined back.
+   attached back as one folded literal array (no join).
 
 The collected state is O(partitions), independent of corpus size; at
 100 TB the full-data costs are two shuffles of the 16-byte
@@ -50,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pulsar_elasticsearch_sync_rs_spark.functions.json_fns import json_literal
 from pulsar_elasticsearch_sync_rs_spark.functions.text import (
     token_count_ws,
     ws_tokens,
@@ -174,36 +175,21 @@ def exclusive_prefix_sum(
         base_by_pid[int(r["__pid"])] = acc
         max_pid = max(max_pid, int(r["__pid"]))
         acc += r["__tot"] or 0
-    # offsets attach as one folded literal-array lookup instead of a
-    # createDataFrame broadcast join — the build of that ≤ P-row table
-    # was a full Spark job per pack call (optimization round 16; the
-    # global_index._attach_offsets rationale). Gaps carry the running
-    # base: no row holds an absent pid, the value is unread.
+    # offsets attach as one folded literal-array lookup (json_literal):
+    # no join and no broadcast-build job per pack call. Gaps carry the
+    # running base: no row holds an absent pid, the value is unread.
     fill, acc_fill = [], 0
     for p in range(max_pid + 1):
         acc_fill = base_by_pid.get(p, acc_fill)
-        fill.append(acc_fill)
-    if max_pid + 1 <= 4096:
-        arr = F.array(*[F.lit(int(v)).cast("bigint") for v in fill])
-        return (
-            local.withColumn(
-                out_col,
-                (
-                    F.element_at(arr, F.col("__pid") + F.lit(1))
-                    + F.col("__local_excl")
-                ).cast("bigint"),
-            )
-            .drop("__pid", "__local_excl")
-        )
-    base = spark.createDataFrame(
-        sorted((p, b) for p, b in base_by_pid.items()),
-        "__pid int, __base bigint",
-    )
-    return (
-        local.join(F.broadcast(base), "__pid")
-        .withColumn(out_col, (F.col("__base") + F.col("__local_excl")).cast("bigint"))
-        .drop("__pid", "__local_excl", "__base")
-    )
+        fill.append(int(acc_fill))
+    arr = json_literal(fill, "array<bigint>")
+    return local.withColumn(
+        out_col,
+        (
+            F.element_at(arr, F.col("__pid") + F.lit(1))
+            + F.col("__local_excl")
+        ).cast("bigint"),
+    ).drop("__pid", "__local_excl")
 
 
 def pack_sequences(

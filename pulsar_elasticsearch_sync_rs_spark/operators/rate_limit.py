@@ -12,7 +12,10 @@ Spark-first design:
   second ORDER BY ts, tiebreaker) <= N`` — one shuffle on
   ``(app, second)``, which at 100 TB is well-distributed because the
   second bucket rotates; a single hot app does NOT hot-spot a single
-  reducer the way ``PARTITION BY app`` alone would.
+  reducer the way ``PARTITION BY app`` alone would. Each row's N is
+  one lookup in a folded ``map<string,int>`` literal
+  (``functions/json_fns.json_literal``): the same plan at any number
+  of configured apps, no join.
 - streaming variant: per-micro-batch application of the same contract
   on the driver (:func:`keep_mask`, over the rows the ETL runner
   collects for the bulk sink anyway — no plan, no shuffle, no job;
@@ -27,12 +30,7 @@ from collections import defaultdict
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Above this many configured apps, the literal CASE chain becomes a
-# pathological expression tree (codegen blowup, deep when/otherwise
-# nesting); switch to a broadcast hash join against a tiny limits table
-# — same semantics, O(1) expression depth, and the broadcast is a few
-# KB even at 100k apps.
-BROADCAST_LIMITS_THRESHOLD = 50
+from pulsar_elasticsearch_sync_rs_spark.functions.json_fns import json_literal
 
 
 def rate_limit_per_second(
@@ -41,10 +39,9 @@ def rate_limit_per_second(
     app: str = "app",
     ts: str = "ts",
     tiebreaker: str | None = None,
-    broadcast_threshold: int = BROADCAST_LIMITS_THRESHOLD,
 ) -> DataFrame:
-    """Keep ≤ limits[app] records per (app, second); apps without a
-    configured limit pass through untouched.
+    """Keep ≤ limits[app] records per (app, second); NULL apps and apps
+    without a configured limit pass through untouched.
 
     ``tiebreaker`` makes the kept set deterministic when timestamps
     collide (fixtures use ``event_id``).
@@ -57,23 +54,12 @@ def rate_limit_per_second(
         order.append(F.col(tiebreaker).asc())
     w = Window.partitionBy(F.col(app), second).orderBy(*order)
 
-    if len(limits) <= broadcast_threshold:
-        # small config: literal CASE chain — no join, constant-folded
-        limit_expr = F.lit(None).cast("int")
-        for a, n in limits.items():
-            limit_expr = F.when(F.col(app) == a, F.lit(n)).otherwise(limit_expr)
-        limited = df.withColumn("__rl_limit", limit_expr)
-    else:
-        # large config: broadcast-join a (app, limit) lookup table;
-        # left join keeps unconfigured apps (null limit → unlimited)
-        limits_df = df.sparkSession.createDataFrame(
-            [(a, int(n)) for a, n in limits.items()],
-            "__rl_app: string, __rl_limit: int",
-        )
-        limited = df.join(
-            F.broadcast(limits_df), F.col(app) == F.col("__rl_app"), "left"
-        ).drop("__rl_app")
-
+    limits_map = json_literal(
+        {a: int(n) for a, n in limits.items()}, "map<string,int>"
+    )
+    limited = df.withColumn(
+        "__rl_limit", F.element_at(limits_map, F.col(app).cast("string"))
+    )
     return (
         limited
         .withColumn(
@@ -117,6 +103,30 @@ def keep_mask(rows, limits: dict[str, int]) -> list[bool]:
     return keep
 
 
+def gcra_admit(t_ns, n: int, tat: int | None) -> tuple[list[bool], int | None]:
+    """The GCRA recurrence for one key over event times ``t_ns`` (int64
+    nanoseconds, already in event-time order) at ``n`` cells per
+    second, starting from theoretical arrival time ``tat`` (``None``
+    for a fresh key): ``allow iff t >= TAT - τ; then
+    TAT = max(t, TAT) + T`` with ``T = 10⁹ // n`` and
+    ``τ = (n - 1)·T``. Returns the keep flags and the final TAT.
+
+    Integer nanoseconds, as the governor crate computes GCRA, shared by
+    :func:`rate_limit_gcra` and the streaming
+    ``streaming/rate_limit_state.stateful_gcra_limiter``."""
+    period = 1_000_000_000 // n
+    tau = (n - 1) * period
+    keep = []
+    for t in t_ns:
+        t = int(t)
+        if tat is None or t >= tat - tau:
+            tat = (t if tat is None else max(t, tat)) + period
+            keep.append(True)
+        else:
+            keep.append(False)
+    return keep, tat
+
+
 def rate_limit_gcra(
     df: DataFrame,
     limits: dict[str, int],
@@ -133,17 +143,15 @@ def rate_limit_gcra(
     boundaries: a fixed window admits up to 2N records in any
     straddling one-second span, GCRA never exceeds N + N·Δt.
 
-    Standard GCRA recurrence per key, over event-time order:
-    ``allow iff t >= TAT - τ; then TAT = max(t, TAT) + T`` with
-    ``T = 1/N`` and ``τ = (N-1)·T`` (cells-1 tolerance: the first
-    cell's conformance is T-spaced, giving a burst of N).
+    The standard GCRA recurrence (:func:`gcra_admit`) runs per key
+    over event-time order; its cells-1 tolerance gives a burst of N.
 
     Scale posture: the recurrence is inherently SEQUENTIAL per key —
     exactly like the reference's in-memory limiter — so it runs as
     ``applyInPandas`` per app: keys parallelize across executors, and
-    per-key state is two floats regardless of group size. Apps without
-    a configured limit never enter the grouped path (union of the
-    untouched complement). Deterministic given (ts, tiebreaker) order
+    per-key state is one int64 TAT (:func:`gcra_admit`) regardless of
+    group size. Apps without a configured limit never enter the
+    grouped path (union of the untouched complement). Deterministic given (ts, tiebreaker) order
     → pytest-pinned against an independent pure-Python model."""
     import pandas as pd
 
@@ -159,21 +167,7 @@ def rate_limit_gcra(
         if n is None:
             return pdf
         s = pdf.sort_values(order_cols, kind="mergesort")
-        # integer NANOSECONDS end to end (pandas timestamps are exact
-        # int64 ns) — no float division anywhere, so the batch and
-        # streaming lanes share bit-identical arithmetic (the governor
-        # crate also computes GCRA in integer nanos)
-        t_ns = s[ts].astype("int64").to_numpy()
-        period = 1_000_000_000 // n
-        tau = (n - 1) * period
-        tat = None
-        keep = []
-        for t in t_ns:
-            if tat is None or t >= tat - tau:
-                tat = (t if tat is None else max(int(t), tat)) + period
-                keep.append(True)
-            else:
-                keep.append(False)
+        keep, _ = gcra_admit(s[ts].astype("int64").to_numpy(), n, None)
         return s[pd.Series(keep, index=s.index)]
 
     # null-safe split: a NULL app is "unconfigured" and must pass

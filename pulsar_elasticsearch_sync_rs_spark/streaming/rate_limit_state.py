@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from pulsar_elasticsearch_sync_rs_spark.operators.rate_limit import gcra_admit
+
 STATE_SCHEMA = T.StructType(
     [
         T.StructField("current_second", T.LongType()),
@@ -103,10 +105,10 @@ def stateful_gcra_limiter(limits: dict[str, int], id_field: str = "event_id"):
     and reference ``src/ratelimiter.rs:43-57``): per-app state is the
     single theoretical-arrival-time, carried across micro-batches as
     integer NANOseconds — ``ts.value`` is the exact int64 ns of the
-    pandas timestamp, so the streaming and batch lanes share
-    bit-identical arithmetic (and the governor crate itself computes
-    GCRA in integer nanos). ``allow iff t >= TAT - τ;
-    TAT = max(t, TAT) + T`` with T = 10⁹//N ns, τ = (N-1)·T."""
+    pandas timestamp. The recurrence is the batch lane's own
+    :func:`~pulsar_elasticsearch_sync_rs_spark.operators.rate_limit.gcra_admit`
+    (``allow iff t >= TAT - τ; TAT = max(t, TAT) + T`` with
+    T = 10⁹//N ns, τ = (N-1)·T), resumed from the stored TAT."""
 
     def fn(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
@@ -126,16 +128,7 @@ def stateful_gcra_limiter(limits: dict[str, int], id_field: str = "event_id"):
         # the micro-batch's group mirrors the batch lane's memory
         # posture (one group in one task).
         pdf = pd.concat(list(pdfs)).sort_values(["ts", id_field])
-        period = 1_000_000_000 // limit
-        tau = (limit - 1) * period
-        keep_mask = []
-        for ts in pdf["ts"]:
-            t = int(ts.value)  # exact int64 ns
-            if tat is None or t >= tat - tau:
-                tat = (t if tat is None else max(t, tat)) + period
-                keep_mask.append(True)
-            else:
-                keep_mask.append(False)
+        keep_mask, tat = gcra_admit((ts.value for ts in pdf["ts"]), limit, tat)
         yield pdf.loc[keep_mask, [id_field, "app", "ts"]]
         if tat is not None:
             state.update((tat,))

@@ -23,8 +23,9 @@ the StreamingQuery from its checkpoint:
   the idempotent sinks — duplicates nothing (e2e pytest).
 - **watch recreation**: an optional ``watch()`` callable polled every
   ``poll_interval_ms`` while the query runs ≙ the 1 Hz topology poll;
-  when it returns True the query is STOPPED cleanly and recreated
-  (checkpoint resume), mirroring the reference's recreate-on-change.
+  when it returns True the query is STOPPED cleanly, never inside a
+  batch's sink, and recreated (checkpoint resume), mirroring the
+  reference's recreate-on-change.
   Recreations are not failures and don't consume the restart budget or
   back off (the reference recreates immediately too).
 
@@ -52,6 +53,31 @@ from pyspark.errors import StreamingQueryException
 # host). The error message carries the offending directory.
 _CKPT_NOT_EMPTY = "STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY"
 _CKPT_DIR_RE = re.compile(r"checkpoint location (\S+) should be empty")
+
+# A watch-driven stop() cancels the query's running jobs. Inside a
+# foreachBatch write that interrupts the sink's I/O, and on this Spark
+# version the interrupt text can overflow the stream thread's stack in
+# StreamExecution's error regex and take the JVM down. So a recreation
+# first waits, at most _STOP_WAIT_S, for a moment with no sink running:
+# the trigger idle, or the next batch still getting its offsets (a
+# stop there lets that batch finish, as offset planning and the sink
+# are not interrupted). isTriggerActive alone is not enough: back to
+# back batches (availableNow, a backlog) leave it false for 2-3 ms.
+_STOP_WAIT_S = 30.0
+_STOP_POLL_S = 0.01
+_PLANNING_PHASE = "Getting offsets from"
+
+
+def _stop_between_batches(query) -> None:
+    """``query.stop()`` once ``query.status`` shows no batch past its
+    offset planning, or once ``_STOP_WAIT_S`` has passed."""
+    deadline = time.monotonic() + _STOP_WAIT_S
+    while time.monotonic() < deadline:
+        status = query.status
+        if not status["isTriggerActive"] or status["message"].startswith(_PLANNING_PHASE):
+            break
+        time.sleep(_STOP_POLL_S)
+    query.stop()
 
 
 def _clean_uncommitted_metadata(dir_uri: str) -> bool:
@@ -146,12 +172,12 @@ def run_supervised(
                     return SupervisedRun(restarts=restarts, recreations=recreations)
                 if watch():
                     break
-            # clean stop + resume-from-checkpoint ≙ consumer recreation;
-            # if the query failed in the window between the poll and the
-            # stop, awaitTermination re-raises and the failure path below
-            # takes over instead
-            query.stop()
-            query.awaitTermination()
+            # clean stop + resume-from-checkpoint ≙ consumer recreation.
+            # It counts once the stop is issued: if the query failed
+            # before the stop took effect (in the batch it let finish),
+            # awaitTermination re-raises and the failure path below
+            # also counts a restart
+            _stop_between_batches(query)
             recreations += 1
             if registry is not None:
                 registry.inc("query_recreations_total", 1.0, query=name)
@@ -160,6 +186,7 @@ def run_supervised(
                     f"supervised query {name!r}: watch() fired more than "
                     f"{max_recreations} times — refusing to recreate forever"
                 )
+            query.awaitTermination()
             continue
         except StreamingQueryException as exc:
             msg = str(exc)

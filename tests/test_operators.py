@@ -101,9 +101,8 @@ def test_rate_limit_cap(spark):
 @pytest.mark.parametrize("tiebreaker_type", ["long", "string"])
 def test_keep_mask_matches_rate_limit_per_second(spark, tiebreaker_type):
     """The driver limiter keeps exactly the rows the Spark window keeps,
-    through both limit lookups (CASE chain and broadcast join), over 20
-    seeded random trials of 12 rows each: NULL apps and NULL timestamps,
-    an unconfigured app, limits 0-3 so bursts overflow, seconds around
+    over 20 seeded random trials of 12 rows each: NULL apps and NULL
+    timestamps, an unconfigured app, limits 0-3 so bursts overflow, seconds around
     the epoch (-1.5 s included, where flooring and truncating toward
     zero disagree), and timestamps shared within a second so the
     tiebreaker decides. Tiebreakers are distinct (one NULL per trial),
@@ -134,56 +133,68 @@ def test_keep_mask_matches_rate_limit_per_second(spark, tiebreaker_type):
     assert 0 < len(want) < len(rows)
     assert any(app is None for _, app, _, _ in rows)
     assert any(ts is None for _, app, ts, _ in rows if app in limits)
-    for threshold in (10**9, 0):
-        kept = rate_limit_per_second(
-            df, limits, app="app", ts="ts", tiebreaker="event_id",
-            broadcast_threshold=threshold,
-        )
-        assert {r["rid"] for r in kept.select("rid").collect()} == want, threshold
+    kept = rate_limit_per_second(df, limits, app="app", ts="ts", tiebreaker="event_id")
+    assert {r["rid"] for r in kept.select("rid").collect()} == want
 
 
-def test_rate_limit_broadcast_lane(spark):
-    # judge item: above the threshold the limiter must switch from the
-    # O(n_apps) CASE chain to a BroadcastHashJoin, with identical results
+def test_rate_limit_many_apps_one_shape(spark):
+    """At 1000 configured apps the limit lookup is still one folded
+    map literal: no join in the executed plan, the unconfigured app
+    passes through, per-app caps hold, and the kept set is
+    :func:`keep_mask`'s."""
     n_apps = 1000
     limits = {f"app{i}": (i % 3) + 1 for i in range(n_apps)}
     rows = [
-        Row(event_id=i * 10 + j, app=f"app{i}", ts="2024-01-01 00:00:00")
+        (i * 10 + j, f"app{i}", 1_704_067_200_000_000 + j)
         for i in range(0, n_apps, 25)
         for j in range(5)
     ]
-    rows += [Row(event_id=99999, app="unconfigured", ts="2024-01-01 00:00:00")]
-    df = spark.createDataFrame(rows).withColumn("ts", F.to_timestamp("ts"))
-
-    # (the CASE-chain lane at 1000 apps overflows the JVM analysis
-    # stack — the very pathology the broadcast lane exists to avoid, so
-    # lane equivalence is checked at 60 apps below)
-    joined = rate_limit_per_second(df, limits, tiebreaker="event_id")
-    assert "BroadcastHashJoin" in joined._jdf.queryExecution().executedPlan().toString()
-
-    small_limits = {f"app{i}": (i % 3) + 1 for i in range(0, 1500, 25)}
-    got_join = sorted(
-        r["event_id"]
-        for r in rate_limit_per_second(
-            df, small_limits, tiebreaker="event_id", broadcast_threshold=0
-        ).collect()
+    rows.append((99999, "unconfigured", 1_704_067_200_000_000))
+    df = spark.createDataFrame(rows, "event_id long, app string, ts_us long").withColumn(
+        "ts", F.timestamp_micros("ts_us")
     )
-    got_case = sorted(
-        r["event_id"]
-        for r in rate_limit_per_second(
-            df, small_limits, tiebreaker="event_id", broadcast_threshold=10**9
-        ).collect()
-    )
-    assert got_join == got_case
+    kept = rate_limit_per_second(df, limits, tiebreaker="event_id")
+    plan = kept._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "BroadcastExchange" not in plan, plan
 
-    got = sorted(r["event_id"] for r in joined.collect())
-    assert 99999 in got  # unconfigured app passes through
-    # per-app caps hold: app0 limit 1, app25 limit 2
-    by_app = {}
-    for r in joined.collect():
-        by_app.setdefault(r["app"], 0)
-        by_app[r["app"]] += 1
-    assert by_app["app0"] == 1 and by_app["app25"] == 2
+    got = [(r["event_id"], r["app"]) for r in kept.collect()]
+    mask = keep_mask([(app, ts_us, eid) for eid, app, ts_us in rows], limits)
+    assert sorted(eid for eid, _ in got) == sorted(
+        eid for (eid, _, _), k in zip(rows, mask) if k
+    )
+    assert 99999 in {eid for eid, _ in got}
+    by_app: dict[str, int] = {}
+    for _, app in got:
+        by_app[app] = by_app.get(app, 0) + 1
+    # app0 limit 1, app25 limit 2, app50 limit 3
+    assert (by_app["app0"], by_app["app25"], by_app["app50"]) == (1, 2, 3)
+
+
+def test_json_literal_folds(spark):
+    """``json_literal`` reaches the optimized plan as one constant: no
+    ``from_json`` is left to parse per row, at 100k array entries and
+    for a map. A NULL key and a missing key both look up NULL."""
+    from pulsar_elasticsearch_sync_rs_spark.functions.json_fns import json_literal
+
+    vals = [i * 7 - 3 for i in range(100_000)]
+    arr = spark.range(0, 100_000, 25_000).select(
+        "id",
+        F.element_at(
+            json_literal(vals, "array<bigint>"), F.col("id").cast("int") + F.lit(1)
+        ).alias("v"),
+    )
+    assert "from_json" not in arr._jdf.queryExecution().optimizedPlan().toString()
+    assert {r["id"]: r["v"] for r in arr.collect()} == {
+        i: vals[i] for i in range(0, 100_000, 25_000)
+    }
+
+    limits = json_literal({"a": 1, "b": 2}, "map<string,int>")
+    looked = spark.createDataFrame([("a",), (None,), ("zz",), ("b",)], "app string").select(
+        "app", F.element_at(limits, F.col("app")).alias("n")
+    )
+    assert "from_json" not in looked._jdf.queryExecution().optimizedPlan().toString()
+    assert dict(looked.collect()) == {"a": 1, None: None, "zz": None, "b": 2}
+    assert looked.schema["n"].dataType.simpleString() == "int"
 
 
 def test_uuid_injection_unique(spark):

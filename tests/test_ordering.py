@@ -197,6 +197,51 @@ def test_global_index_uniform_fast_path_matches_classic(spark):
     assert sorted(fast.values()) == list(range(3000))
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("uniform", [False, True], ids=["classic", "uniform"])
+def test_global_index_above_4096_partitions(spark, uniform):
+    """Past the old 4096-partition ceiling both paths keep their one
+    shape: exact gap-free positions in key order, offsets from the
+    folded literal (no broadcast), and the uniform path still without
+    a range sampler or a checkpoint."""
+    n = 20_000
+    df = spark.range(n).select(
+        ((F.col("id") * 7919) % n).alias("k"), F.col("id")
+    )
+    kw = {"uniform_long_range": (0, n)} if uniform else {}
+    out = global_index(df, "k", num_partitions=4097, **kw)
+    plan = _executed_plan(out)
+    assert "BroadcastExchange" not in plan and "BroadcastHashJoin" not in plan
+    if uniform:
+        assert "rangepartitioning" not in plan.lower()
+        assert "ExistingRDD" not in plan  # no localCheckpoint scan
+    got = [(r.k, r.pos) for r in out.select("k", "pos").collect()]
+    assert sorted(pos for _, pos in got) == list(range(n))
+    assert all(k == pos for k, pos in got)  # keys are 0..n-1
+
+
+def test_epoch_shuffle_two_level_above_4096_blocks(spark):
+    """More than 4096 blocks (block_size=1, so pos2 is the block rank
+    itself) still ride the one folded literal: no broadcast, and the
+    permutation is the driver's closed form."""
+    from pulsar_elasticsearch_sync_rs_spark.operators.ordering import (
+        _block_permutation,
+        epoch_shuffle_two_level,
+    )
+
+    n = 5000
+    base = spark.range(n).select(F.col("id").alias("doc_id"), F.col("id").alias("pos"))
+    out = epoch_shuffle_two_level(base, "doc_id", epoch=2, block_size=1, n=n)
+    plan = _executed_plan(out)
+    assert "BroadcastExchange" not in plan and "BroadcastHashJoin" not in plan
+    got = {r.doc_id: r.pos2 for r in out.collect()}
+    assert got == dict(enumerate(_block_permutation(2, n)))
+    assert sorted(got.values()) == list(range(n))
+
+
 def test_global_index_reserved_column_guards(spark):
     """Round-12 ADVICE: a caller column named __pid/__mid/__off would
     be silently overwritten and dropped — fail loudly instead."""

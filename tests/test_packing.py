@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from pulsar_elasticsearch_sync_rs_spark.functions.json_fns import json_literal
 from pulsar_elasticsearch_sync_rs_spark.operators.packing import (
     exclusive_prefix_sum,
     pack_sequences,
@@ -90,6 +91,33 @@ def test_exclusive_prefix_sum_is_order_correct(spark):
         r["k"]: r["start_off"]
         for r in exclusive_prefix_sum(df, "k", "v").collect()
     }
+    acc = 0
+    for k, v in vals:
+        assert got[k] == acc, k
+        acc += v
+
+
+def test_exclusive_prefix_sum_above_4096_partitions(spark, monkeypatch):
+    """4097 range partitions: the per-partition bases still attach as
+    one folded literal (it carries more than 4096 entries here), with
+    no broadcast in the plan and exact sums."""
+    from pulsar_elasticsearch_sync_rs_spark.operators import packing
+
+    sizes = []
+
+    def spy(value, ddl):
+        sizes.append(len(value))
+        return json_literal(value, ddl)
+
+    monkeypatch.setattr(packing, "json_literal", spy)
+    rng = random.Random(5)
+    vals = [(i, rng.randrange(0, 50)) for i in range(20_000)]
+    df = spark.createDataFrame(vals, "k long, v long")
+    out = exclusive_prefix_sum(df, "k", "v", num_partitions=4097)
+    assert sizes and sizes[0] > 4096
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan and "BroadcastHashJoin" not in plan
+    got = {r["k"]: r["start_off"] for r in out.collect()}
     acc = 0
     for k, v in vals:
         assert got[k] == acc, k

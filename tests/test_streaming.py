@@ -1294,6 +1294,90 @@ def test_supervisor_watch_recreates_query(spark, sf_dir, tmpdir):
     }
 
 
+class _FakeQuery:
+    """A StreamingQuery stand-in for the recreation stop: ``status``
+    returns the given statuses in turn, then the last one forever, and
+    ``calls`` records each status read and the stop."""
+
+    def __init__(self, *statuses: tuple[bool, str]):
+        self.statuses = list(statuses)
+        self.calls: list[tuple[bool, str] | str] = []
+
+    @property
+    def status(self) -> dict:
+        active, message = self.statuses.pop(0) if len(self.statuses) > 1 else self.statuses[0]
+        self.calls.append((active, message))
+        return {"isTriggerActive": active, "message": message, "isDataAvailable": True}
+
+    def stop(self) -> None:
+        self.calls.append("stop")
+
+
+_SINK = (True, "Processing new data")
+
+
+@pytest.mark.parametrize(
+    "after",
+    [(False, "Waiting for next trigger"), (True, "Getting offsets from FileStreamSource[x]")],
+    ids=["trigger_idle", "next_batch_planning"],
+)
+def test_recreation_stop_waits_for_the_batch_in_flight(after):
+    """The watch-driven stop comes only once no batch is past its
+    offset planning: after an idle trigger, or while back-to-back
+    batches plan the next one. Writing the offsets log is already too
+    late (the sink follows at once)."""
+    from pulsar_elasticsearch_sync_rs_spark.streaming import supervisor
+
+    wal = (True, "Writing offsets to log")
+    q = _FakeQuery(_SINK, _SINK, wal, _SINK, after)
+    supervisor._stop_between_batches(q)
+    assert q.calls == [_SINK, _SINK, wal, _SINK, after, "stop"]
+
+
+def test_recreation_stop_still_comes_once_the_wait_runs_out(monkeypatch):
+    import time
+
+    from pulsar_elasticsearch_sync_rs_spark.streaming import supervisor
+
+    monkeypatch.setattr(supervisor, "_STOP_WAIT_S", 0.2)
+    q = _FakeQuery(_SINK)
+    t0 = time.monotonic()
+    supervisor._stop_between_batches(q)
+    assert 0.2 <= time.monotonic() - t0 < 5.0
+    assert q.calls[-1] == "stop" and q.calls.count("stop") == 1
+    assert set(q.calls[:-1]) == {_SINK}
+
+
+def test_planning_phase_is_a_status_spark_shows_between_batches(spark, tmpdir):
+    """The recreation stop tells offset planning from the rest of a
+    batch by its status message; pin that message against this Spark
+    version on back-to-back file-source batches."""
+    import time
+
+    from pulsar_elasticsearch_sync_rs_spark.streaming.supervisor import _PLANNING_PHASE
+
+    src = os.path.join(tmpdir, "phase_src")
+    for i in range(3):
+        spark.range(i, i + 1).write.mode("append").parquet(src)
+    q = (
+        spark.readStream.schema("id long").option("maxFilesPerTrigger", 1).parquet(src)
+        .writeStream.foreachBatch(lambda df, batch_id: time.sleep(0.2))
+        .option("checkpointLocation", os.path.join(tmpdir, "ckpt_phase"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    seen = set()
+    try:
+        while q.isActive:
+            status = q.status
+            if status["isTriggerActive"]:
+                seen.add(status["message"])
+            time.sleep(0.002)
+    finally:
+        q.stop()
+    assert any(m.startswith(_PLANNING_PHASE) for m in seen), seen
+
+
 def test_supervisor_heals_interrupted_offsets_write(spark, sf_dir, tmpdir):
     """A stop() that interrupts the very first offsets write leaves the
     atomic-rename temp file (`.0.<uuid>.tmp`) in ckpt/offsets with no
