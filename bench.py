@@ -1,7 +1,7 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "plans": {name: {"jobs": n, ...}}, "sf": ...}.
 
 Each query is executed as a count()/collect-free action (count of the
 result) after a warm-up of the session. Wall time per query includes
@@ -79,7 +79,8 @@ HEADLINE = [
     # q_split_leakage_safe are NOT here for the same reason as the IVF
     # semantic dedup lane above: at fixture scale their walls are
     # iteration/checkpoint constants — their cost curves live in the
-    # decade table (tools/probe_round12_decade.py, SCALE.md).
+    # decade table (SCALE.md; the probe that measured it is in git
+    # history: `git show 005db1e:tools/probe_round12_decade.py`).
     "q_epoch_shuffle",
     # round-14 additions: the blendable-dataset interleave (ONE skinny
     # range exchange since the round-15 closed-form position rewrite,
@@ -113,40 +114,46 @@ REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 # SHAPE instead — an extra ArrowEvalPython/MapInPandas node or a
 # shuffle appearing in a pinned-shuffle-free lane fails the bench run
 # loudly no matter what the clock says. Counts are max Python-crossing
-# nodes in the executed plan (0 = pure JVM lane).
+# nodes in the executed plan (0 = pure JVM lane). jobs_max is the most
+# Spark jobs one run of the lane (build + count()) may submit: each job
+# pays a fixed scheduling cost, so on this bursty host the job count is
+# the load-proof witness that predicts a lane's wall. One pin holds at
+# every fixture size: the counts were equal at sf0.001, sf0.01 and sf0.1
+# on 2 and 4 cores, and match a 32-core sf0.1 profile
+# (plans/r16/profile_after.json).
 PLAN_PINS: dict[str, dict] = {
-    "q_filter_regex": {"arrow_max": 0, "shuffle_free": True},
-    "q_group_counts": {"arrow_max": 0},
-    "q_rate_limit": {"arrow_max": 0},
-    "q_etl_chain": {"arrow_max": 0},
-    "q_tpch_pricing": {"arrow_max": 0},
-    "q_tpch_join_topk": {"arrow_max": 0},
-    "q_region_revenue": {"arrow_max": 0},
-    "q_window_running": {"arrow_max": 0},
-    "q_sessionize": {"arrow_max": 0},
-    "q_asof_join": {"arrow_max": 0},
-    "q_dedup_exact": {"arrow_max": 0},
-    "q_corpus_curation": {"arrow_max": 0},
-    "q_text_stats": {"arrow_max": 0},
-    "q_token_count": {"arrow_max": 0},
-    "q_repetition_filter": {"arrow_max": 0, "shuffle_free": True},
-    "q_decontaminate": {"arrow_max": 0},
-    "q_range_join": {"arrow_max": 0},
-    "q_time_bucket_rollup": {"arrow_max": 0},
+    "q_filter_regex": {"arrow_max": 0, "shuffle_free": True, "jobs_max": 2},
+    "q_group_counts": {"arrow_max": 0, "jobs_max": 3},
+    "q_rate_limit": {"arrow_max": 0, "jobs_max": 3},
+    "q_etl_chain": {"arrow_max": 0, "jobs_max": 5},
+    "q_tpch_pricing": {"arrow_max": 0, "jobs_max": 3},
+    "q_tpch_join_topk": {"arrow_max": 0, "jobs_max": 4},
+    "q_region_revenue": {"arrow_max": 0, "jobs_max": 8},
+    "q_window_running": {"arrow_max": 0, "jobs_max": 2},
+    "q_sessionize": {"arrow_max": 0, "jobs_max": 3},
+    "q_asof_join": {"arrow_max": 0, "jobs_max": 2},
+    "q_dedup_exact": {"arrow_max": 0, "jobs_max": 3},
+    "q_corpus_curation": {"arrow_max": 0, "jobs_max": 5},
+    "q_text_stats": {"arrow_max": 0, "jobs_max": 2},
+    "q_token_count": {"arrow_max": 0, "jobs_max": 3},
+    "q_repetition_filter": {"arrow_max": 0, "shuffle_free": True, "jobs_max": 2},
+    "q_decontaminate": {"arrow_max": 0, "jobs_max": 7},
+    "q_range_join": {"arrow_max": 0, "jobs_max": 3},
+    "q_time_bucket_rollup": {"arrow_max": 0, "jobs_max": 3},
     # signature pass rides the candidates_from_bands checkpoint job
     # (one pass by construction); the visible node is the verify kernel
-    "q_dedup_minhash_verified": {"arrow_max": 1},
-    "q_knn_cosine": {"arrow_max": 1},
-    "q_embed_neardup_ivf": {"arrow_max": 2},  # assign + within-cell cosine
-    "q_knn_pq": {"arrow_max": 3},  # train/encode + probe ADC + re-rank
-    "q_llm_pipeline": {"arrow_max": 1},  # at most the packing kernel (the gate stays expression-form — the Arrow twin lost the sf100 A/B, SCALE.md round 13)
-    "q_substring_dedup": {"arrow_max": 0},  # md5 grams + windows, pure JVM
-    "q_bm25_topk": {"arrow_max": 0},  # tokenize/agg/joins all JVM; the ≤5-element sum is an interpreted HOF, not Arrow
-    "q_media_jpeg_prog": {"arrow_max": 2},  # synth corpus + decode: exactly two MapInPandas
-    "q_epoch_shuffle": {"arrow_max": 0, "window_free": True},  # pure JVM (monotonic-id rank + folded literal offsets); a Window node here is the single-partition regression
-    "q_interleave_mix": {"arrow_max": 0, "window_free": True},  # one global_index pass + closed-form positions — same no-window contract as q_epoch_shuffle
-    "q_epoch_two_level": {"arrow_max": 0},  # one bounded per-block window is expected; no Arrow crossing anywhere
-    "q_pack_bins_mixed": {"arrow_max": 0, "window_free": True},  # rank arithmetic end-to-end; a per-class window here is the mega-class skew regression
+    "q_dedup_minhash_verified": {"arrow_max": 1, "jobs_max": 7},
+    "q_knn_cosine": {"arrow_max": 1, "jobs_max": 6},
+    "q_embed_neardup_ivf": {"arrow_max": 2, "jobs_max": 6},  # assign + within-cell cosine
+    "q_knn_pq": {"arrow_max": 3, "jobs_max": 8},  # train/encode + probe ADC + re-rank
+    "q_llm_pipeline": {"arrow_max": 1, "jobs_max": 16},  # at most the packing kernel (the gate stays expression-form — the Arrow twin lost the sf100 A/B, SCALE.md round 13)
+    "q_substring_dedup": {"arrow_max": 0, "jobs_max": 3},  # md5 grams + windows, pure JVM
+    "q_bm25_topk": {"arrow_max": 0, "jobs_max": 13},  # tokenize/agg/joins all JVM; the ≤5-element sum is an interpreted HOF, not Arrow
+    "q_media_jpeg_prog": {"arrow_max": 2, "jobs_max": 3},  # synth corpus + decode: exactly two MapInPandas
+    "q_epoch_shuffle": {"arrow_max": 0, "window_free": True, "jobs_max": 5},  # pure JVM (monotonic-id rank + folded literal offsets); a Window node here is the single-partition regression
+    "q_interleave_mix": {"arrow_max": 0, "window_free": True, "jobs_max": 6},  # one global_index pass + closed-form positions — same no-window contract as q_epoch_shuffle
+    "q_epoch_two_level": {"arrow_max": 0, "jobs_max": 6},  # one bounded per-block window is expected; no Arrow crossing anywhere
+    "q_pack_bins_mixed": {"arrow_max": 0, "window_free": True, "jobs_max": 5},  # rank arithmetic end-to-end; a per-class window here is the mega-class skew regression
 }
 
 # Streaming state pins (round 8): the stateful lanes' peak state-store
@@ -290,6 +297,30 @@ def _plan_profile(df) -> dict:
     }
 
 
+def timed_reps(spark, name: str, fn, sf_dir: str, reps: int = REPS):
+    """Run lane ``name`` (``fn(spark, sf_dir).count()``) ``reps`` times
+    under one Spark job group. Returns the per-rep walls, the last rep's
+    DataFrame and row count, and the Spark jobs one run submits: the
+    group's job count over ``reps``, read after the listener bus drains
+    so no job-start event is missed."""
+    sc = spark.sparkContext
+    group = f"bench-{name}"
+    sc.setJobGroup(group, f"bench lane {name}")
+    walls = []
+    try:
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            df = fn(spark, sf_dir)
+            n = df.count()
+            walls.append(time.perf_counter() - t0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group)) / reps
+    return walls, df, n, jobs
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -332,16 +363,12 @@ def main() -> None:
     for name in HEADLINE:
         fn = qs[name]
         fn(spark, sf_dir).count()  # untimed warm-up rep
-        reps = []
         sh0 = _shuffle_totals(spark)
-        for _ in range(REPS):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            n = df.count()
-            reps.append(time.perf_counter() - t0)
+        reps, df, n, jobs = timed_reps(spark, name, fn, sf_dir)
         sh1 = _shuffle_totals(spark)
         timings[name] = round(min(reps), 3)
         prof = _plan_profile(df)
+        prof["jobs"] = round(jobs, 2)
         # per-run shuffle bytes: identical across reps (deterministic
         # plan), so the rep-loop delta / REPS is one run's traffic.
         # An unreachable status API is a pin violation, not a zero:
@@ -360,6 +387,11 @@ def main() -> None:
                 violations.append(
                     f"{name}: {prof['arrow_nodes']} Python-crossing plan nodes"
                     f" > pinned max {pin['arrow_max']}"
+                )
+            if prof["jobs"] > pin.get("jobs_max", 10**9):
+                violations.append(
+                    f"{name}: {prof['jobs']} Spark jobs per run"
+                    f" > pinned max {pin['jobs_max']}"
                 )
             # raw bytes, not the rounded MB figure — a few hundred
             # bytes of real shuffle per rep rounds to 0.000 MB and
@@ -389,7 +421,7 @@ def main() -> None:
             violations.append(f"{name}: row-at-a-time Python UDF in the plan")
         print(
             f"# {name}: best {timings[name]:.3f}s of {[round(r, 3) for r in reps]} ({n} rows)"
-            f" [arrow={prof['arrow_nodes']}"
+            f" [jobs={prof['jobs']} arrow={prof['arrow_nodes']}"
             f" shuffle={prof['shuffle_read_mb']}/{prof['shuffle_write_mb']}MB]",
             file=sys.stderr,
         )

@@ -34,7 +34,6 @@ class PipelineConfig:
     pulsar_namespace: str = "public/default"
     topic_regex: str = ".*"
     subscription: str = "pulsar-es-sync"
-    consumer_name: str = "pulsar-es-sync"
     batch_size: int = 1000  # consumer permits -> maxFilesPerTrigger analog
     # JWT token auth, honored from the PULSAR_TOKEN env var like the
     # reference (src/pulsar.rs:77-84: with_auth(Authentication{name:
@@ -61,7 +60,6 @@ class PipelineConfig:
     es_addr: str = "http://localhost:9200"
     buffer_size: int = 1000  # docs per flush -> micro-batch admission
     flush_interval_ms: int = 5000  # -> trigger(processingTime)
-    channel_buffer_size: int = 2048  # backpressure -> source admission
 
     # --- rendering ---
     # The reference buckets the dated index by the HOST-LOCAL date

@@ -52,6 +52,7 @@ def get_spark(
 ) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -64,7 +65,10 @@ def get_spark(
         # local mode = driver-only: the driver heap IS executor memory.
         # 16g with 32 task threads GC-thrashes on 600k-row joins
         # (measured: 62s -> 3.6s on the 5-way star join when raised).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "90g"))
+        # The default is half the host's RAM: a heap above it lets the
+        # JVM grow until the host kills it, and half leaves room for
+        # Arrow buffers, Python workers and a second session
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", f"{host_mb // 2}m"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # events fixture stores TIMESTAMP(NANOS); read as long and convert

@@ -49,12 +49,8 @@ is the standard streaming first-wins divergence, same as
 
 from __future__ import annotations
 
-import contextlib
 import hashlib
 import os
-
-# reentrant no-op context for the opt-out stage_timings path
-_nullcm = contextlib.nullcontext()
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -679,7 +675,6 @@ def run_curation_ingest(
     compact_every: int | None = None,
     contamination_max_frac: float | None = None,
     gate_pred=None,
-    stage_timings: list | None = None,
 ):
     """Start the curation ingestion stream; returns the StreamingQuery.
 
@@ -773,16 +768,6 @@ def run_curation_ingest(
     grows one-per-trigger forever (see ``compact_index_batches``).
     Compaction is idempotent, so a failure surfacing through the batch
     (and the supervisor's restart) re-runs it safely.
-
-    ``stage_timings`` (opt-in, profiling/observability): a caller list
-    that receives one dict per micro-batch with driver-measured walls
-    of the batch's action groups — ``signature`` (the eager banded-
-    signature checkpoint, which also materializes gate → decontaminate
-    → sha dedup), ``admit_ckpt`` (the eager admitted-batch checkpoint
-    — the verify joins + anti-join; often the dominant wall),
-    ``corpus_write`` (the land), ``sha_slice`` / ``band_slice``
-    (index appends), ``counters`` and ``compact``. Driver-side ``perf_counter`` around existing actions
-    — zero extra Spark jobs.
     """
     # replay-safety guard: every write this job makes is a per-batch
     # overwrite, but the TRANSPORT is caller-supplied — an id-less ES
@@ -841,8 +826,6 @@ def run_curation_ingest(
         )
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import time as _time
-
         from ..operators.skew import spread_scan
 
         spark = batch_df.sparkSession
@@ -854,23 +837,6 @@ def run_curation_ingest(
         # trigger already carries >= defaultParallelism splits.
         batch_df = spread_scan(batch_df)
         counts: dict[str, int] = {}
-        walls: dict[str, float] = {"batch_id": batch_id}
-        _batch_t0 = _time.perf_counter()
-
-        def _timed(name: str):
-            class _T:
-                def __enter__(self):
-                    self.t0 = _time.perf_counter()
-
-                def __exit__(self, *exc):
-                    walls[name] = round(
-                        walls.get(name, 0.0)
-                        + _time.perf_counter()
-                        - self.t0,
-                        3,
-                    )
-
-            return _T() if stage_timings is not None else _nullcm
         # counters apply once per batch_id even across in-process
         # restarts that REBUILD this closure (run_supervised calls the
         # caller's start_query per restart, so the in-memory set alone
@@ -986,9 +952,7 @@ def run_curation_ingest(
         # batch cost); the unbounded history never re-shuffles.
         # _sha_table_ready is filesystem-truth: a cross-process restart
         # re-registers the surviving history instead of skipping dedup
-        with _timed("sha_ready"):
-            sha_ready = _sha_table_ready(spark, table, sha_dir, n_buckets)
-        if sha_ready:
+        if _sha_table_ready(spark, table, sha_dir, n_buckets):
             deduped = prior_sha_anti_join(
                 spark, table, deduped, exclude_batch=batch_id, n_buckets=n_buckets
             )
@@ -1015,15 +979,14 @@ def run_curation_ingest(
             # slice write — eager checkpoint caps that at one job and
             # truncates the lineage the slice write would otherwise
             # drag through the band-table read
-            with _timed("signature"):
-                bands_b = minhash_bands(
-                    deduped,
-                    text=text_col,
-                    id_col=id_col,
-                    num_hashes=nd_num_hashes,
-                    bands=nd_bands,
-                    shingle_k=nd_shingle_k,
-                ).localCheckpoint(eager=True)
+            bands_b = minhash_bands(
+                deduped,
+                text=text_col,
+                id_col=id_col,
+                num_hashes=nd_num_hashes,
+                bands=nd_bands,
+                shingle_k=nd_shingle_k,
+            ).localCheckpoint(eager=True)
             new_t = deduped.select(
                 F.col(id_col).alias("__new"), F.col(text_col).alias("__ta")
             )
@@ -1051,11 +1014,9 @@ def run_curation_ingest(
             )
             verify_pairs = within_pairs
 
-            with _timed("bands_ready"):
-                bands_ready = _bucketed_table_ready(
-                    spark, b_table, bands_dir, n_buckets, band_ddl, "band_hash"
-                )
-            if bands_ready:
+            if _bucketed_table_ready(
+                spark, b_table, bands_dir, n_buckets, band_ddl, "band_hash"
+            ):
                 prior_b = (
                     spark.table(b_table)
                     .filter(F.col("batch") != batch_id)
@@ -1071,20 +1032,19 @@ def run_curation_ingest(
                 # the checkpoint the bucket join + distinct ran TWICE
                 # per micro-batch (once for the broadcast, once in the
                 # verify join).
-                with _timed("cross_ckpt"):
-                    cross = (
-                        cross_band_candidates(
-                            bands_b.repartition(n_buckets, "band_hash"),
-                            prior_b,
-                            id_col=id_col,
-                            max_bucket=nd_max_bucket,
-                            keep_roles=True,
-                        )
-                        .withColumnRenamed("new_id", "__new")
-                        .withColumnRenamed("old_id", "__hist")
-                        .distinct()
-                        .localCheckpoint(eager=True)
+                cross = (
+                    cross_band_candidates(
+                        bands_b.repartition(n_buckets, "band_hash"),
+                        prior_b,
+                        id_col=id_col,
+                        max_bucket=nd_max_bucket,
+                        keep_roles=True,
                     )
+                    .withColumnRenamed("new_id", "__new")
+                    .withColumnRenamed("old_id", "__hist")
+                    .distinct()
+                    .localCheckpoint(eager=True)
+                )
                 # verify against history TEXT pulled from the landed
                 # corpus. Partition filter excludes the slice a REPLAY
                 # of this batch is about to overwrite: its ids can't be
@@ -1175,41 +1135,31 @@ def run_curation_ingest(
         # persist kept the full logical plan under the cache, and
         # INSERT OVERWRITE's read-your-own-target analysis sees the
         # LOGICAL plan — the cache never protected it.)
-        with _timed("admit_ckpt"):
-            admitted = _observed(admitted, "admitted").localCheckpoint(
-                eager=True
-            )
+        admitted = _observed(admitted, "admitted").localCheckpoint(eager=True)
         try:
             if count_this_batch:
-                with _timed("counters"):
-                    # every value below is an Observation read — the
-                    # metrics fired during the batch's own cache-fill/
-                    # checkpoint jobs, so the whole counter block
-                    # launches ZERO Spark jobs (optimization round 16;
-                    # was six .count() jobs per counted batch)
-                    counts["curation_input"] = _obs_n("input")
-                    counts["curation_gated"] = (
-                        counts["curation_input"] - _obs_n("gated")
-                    )
-                    # hashed is row-identical to clean (withColumn
-                    # preserves cardinality)
-                    n_clean = _obs_n("hashed")
-                    counts["curation_contaminated"] = (
-                        counts["curation_input"]
-                        - counts["curation_gated"]
-                        - n_clean
-                    )
-                    n_admitted = _obs_n("admitted")
-                    n_near = _obs_n("near") if rate_limits else n_admitted
-                    n_deduped = (
-                        _obs_n("deduped")
-                        if near_dup_threshold is not None
-                        else n_near
-                    )
-                    counts["curation_duplicate"] = n_clean - n_deduped
-                    counts["curation_near_duplicate"] = n_deduped - n_near
-                    counts["curation_rate_dropped"] = n_near - n_admitted
-                    counts["curation_admitted"] = n_admitted
+                # every value below is an Observation read — the
+                # metrics fired during the batch's own cache-fill/
+                # checkpoint jobs, so the whole counter block
+                # launches ZERO Spark jobs (optimization round 16;
+                # was six .count() jobs per counted batch)
+                counts["curation_input"] = _obs_n("input")
+                counts["curation_gated"] = counts["curation_input"] - _obs_n("gated")
+                # hashed is row-identical to clean (withColumn
+                # preserves cardinality)
+                n_clean = _obs_n("hashed")
+                counts["curation_contaminated"] = (
+                    counts["curation_input"] - counts["curation_gated"] - n_clean
+                )
+                n_admitted = _obs_n("admitted")
+                n_near = _obs_n("near") if rate_limits else n_admitted
+                n_deduped = (
+                    _obs_n("deduped") if near_dup_threshold is not None else n_near
+                )
+                counts["curation_duplicate"] = n_clean - n_deduped
+                counts["curation_near_duplicate"] = n_deduped - n_near
+                counts["curation_rate_dropped"] = n_near - n_admitted
+                counts["curation_admitted"] = n_admitted
 
             # LAND: the corpus batch, the sha slice and (near-dup on)
             # the band slice are INDEPENDENT outputs — distinct
@@ -1222,48 +1172,42 @@ def run_curation_ingest(
             # idle). At bench triggers the lane is job-count-bound, so
             # overlapping 2-3 fixed job latencies is the direct win.
             def _land_corpus():
-                with _timed("corpus_write"):
-                    admitted.drop("__sha").write.mode("overwrite").parquet(
-                        os.path.join(out_dir, f"batch={batch_id}")
-                    )
+                admitted.drop("__sha").write.mode("overwrite").parquet(
+                    os.path.join(out_dir, f"batch={batch_id}")
+                )
 
             def _land_sha():
-                with _timed("sha_slice"):
-                    _write_sha_slice(
-                        admitted.select(
-                            F.col("__sha").alias("sha"),
-                            F.col(id_col).alias("doc_id"),
-                        ),
-                        table,
-                        sha_dir,
-                        batch_id,
-                        n_buckets,
-                        lineage_safe=True,  # admitted is checkpoint-rooted
-                    )
+                _write_sha_slice(
+                    admitted.select(
+                        F.col("__sha").alias("sha"),
+                        F.col(id_col).alias("doc_id"),
+                    ),
+                    table,
+                    sha_dir,
+                    batch_id,
+                    n_buckets,
+                    lineage_safe=True,  # admitted is checkpoint-rooted
+                )
 
             def _land_bands():
-                with _timed("band_slice"):
-                    _write_bucketed_slice(
-                        bands_b.join(
-                            admitted.select(id_col), id_col, "left_semi"
-                        ),
-                        b_table,
-                        bands_dir,
-                        batch_id,
-                        n_buckets,
-                        bucket_col="band_hash",
-                        cols=["band_id", "band_hash", id_col],
-                        ddl_cols=band_ddl,
-                        # both sides are eager checkpoints — no read of
-                        # the bands table survives in this lineage
-                        lineage_safe=True,
-                    )
+                _write_bucketed_slice(
+                    bands_b.join(admitted.select(id_col), id_col, "left_semi"),
+                    b_table,
+                    bands_dir,
+                    batch_id,
+                    n_buckets,
+                    bucket_col="band_hash",
+                    cols=["band_id", "band_hash", id_col],
+                    ddl_cols=band_ddl,
+                    # both sides are eager checkpoints — no read of
+                    # the bands table survives in this lineage
+                    lineage_safe=True,
+                )
 
             land = [_land_corpus, _land_sha]
             if near_dup_threshold is not None:
                 land.append(_land_bands)
-            with _timed("land"):
-                _run_overlapped(land)
+            _run_overlapped(land)
             if transport is not None:
                 indexed = admitted.select(
                     F.concat(
@@ -1326,11 +1270,7 @@ def run_curation_ingest(
                         id_col=id_col,
                     )
                 )
-            with _timed("compact"):
-                _run_overlapped(compactions)
-        if stage_timings is not None:
-            walls["batch_total"] = round(_time.perf_counter() - _batch_t0, 3)
-            stage_timings.append(walls)
+            _run_overlapped(compactions)
 
     writer = stream_docs.writeStream.foreachBatch(ingest_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -53,31 +53,35 @@ def stateful_rate_limiter(limits: dict[str, int], id_field: str = "event_id"):
     ) -> Iterator[pd.DataFrame]:
         app = key[0]
         limit = limits.get(app)
+        if limit is None:
+            for pdf in pdfs:
+                yield pdf[[id_field, "app", "ts"]]
+            return
         if state.exists:
             current_second, admitted = state.get
         else:
             current_second, admitted = -1, 0
-        for pdf in pdfs:
-            if limit is None:
-                yield pdf[[id_field, "app", "ts"]]
-                continue
-            pdf = pdf.sort_values(["ts", id_field])
-            keep_mask = []
-            for ts in pdf["ts"]:
-                sec = int(ts.timestamp())
-                # Only a FORWARD second-change resets the bucket; a
-                # late (out-of-order) event with sec < current_second
-                # counts against the stored second's budget, so
-                # alternating seconds across micro-batches cannot
-                # over-admit past the per-second cap.
-                if sec > current_second:
-                    current_second, admitted = sec, 0
-                if admitted < limit:
-                    admitted += 1
-                    keep_mask.append(True)
-                else:
-                    keep_mask.append(False)
-            yield pdf.loc[keep_mask, [id_field, "app", "ts"]]
+        # one sort over the whole group, as stateful_gcra_limiter does:
+        # a group larger than arrow.maxRecordsPerBatch arrives as
+        # several chunks, and sorting each on its own would charge an
+        # earlier second's rows to a later second's budget
+        pdf = pd.concat(list(pdfs)).sort_values(["ts", id_field])
+        keep_mask = []
+        for ts in pdf["ts"]:
+            sec = int(ts.timestamp())
+            # Only a FORWARD second-change resets the bucket; a
+            # late (out-of-order) event with sec < current_second
+            # counts against the stored second's budget, so
+            # alternating seconds across micro-batches cannot
+            # over-admit past the per-second cap.
+            if sec > current_second:
+                current_second, admitted = sec, 0
+            if admitted < limit:
+                admitted += 1
+                keep_mask.append(True)
+            else:
+                keep_mask.append(False)
+        yield pdf.loc[keep_mask, [id_field, "app", "ts"]]
         state.update((current_second, admitted))
 
     return fn

@@ -62,3 +62,11 @@ def test_batch_shuffles_keep_cpus_state_stores_take_half(spark, sf_dir):
         assert parts == {4}, parts
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_driver_heap_fits_the_host(spark):
+    """The default driver heap is sized from the host: a heap larger
+    than physical memory lets the JVM grow until the host kills it."""
+    host_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap_bytes = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    assert 0 < heap_bytes <= host_bytes, (heap_bytes, host_bytes)

@@ -663,6 +663,52 @@ def test_session_window_stream_matches_batch(spark, sf_dir, tmpdir):
     assert got_multiset == batch_multiset
 
 
+@pytest.mark.parametrize("limiter", ["fixed_window", "gcra"])
+def test_stateful_limiters_order_the_whole_group(spark, tmpdir, limiter):
+    """One app, one micro-batch, limit 2/s: four events in second 11
+    are written before four in second 10. At two rows per Arrow chunk
+    the group arrives as four chunks; both limiters must still admit in
+    event-time order, two per second (ids 0, 1 and 10, 11). Sorting
+    each chunk on its own admitted second 11 first and then charged
+    second 10's rows to its spent budget."""
+    from pulsar_elasticsearch_sync_rs_spark.streaming.rate_limit_state import (
+        rate_limit_stream_gcra,
+    )
+
+    src_dir = os.path.join(tmpdir, "src")
+    rows = [(10 + i, "a", 11) for i in range(4)] + [(i, "a", 10) for i in range(4)]
+    (
+        spark.createDataFrame(rows, "event_id long, app string, sec long")
+        .withColumn("ts", F.timestamp_seconds("sec"))
+        .drop("sec")
+        .coalesce(1)
+        .write.parquet(src_dir)
+    )
+    stream = spark.readStream.schema("event_id long, app string, ts timestamp").parquet(
+        src_dir
+    )
+    limit = {"fixed_window": rate_limit_stream, "gcra": rate_limit_stream_gcra}[limiter]
+    out_dir = os.path.join(tmpdir, "out")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        q = (
+            limit(stream, {"a": 2})
+            .writeStream.outputMode("append")
+            .option("checkpointLocation", os.path.join(tmpdir, "ckpt"))
+            .trigger(availableNow=True)
+            .format("parquet")
+            .option("path", out_dir)
+            .start()
+        )
+        assert q.awaitTermination(120)
+    finally:
+        spark.conf.set(key, prev)
+    got = sorted(r["event_id"] for r in spark.read.parquet(out_dir).collect())
+    assert got == [0, 1, 10, 11]
+
+
 def test_stateful_gcra_across_batches(spark, tmpdir):
     """The GCRA theoretical-arrival-time persists across micro-batches:
     with N=2/s (T=0.5, tau=0.5), batch 1 admits 0.0s and 0.1s leaving

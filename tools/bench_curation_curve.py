@@ -100,10 +100,8 @@ def main() -> None:
     sizes = [1_000, 5_000, 10_000, 25_000, 50_000]
     sizes = [s for s in sizes if s <= n_docs]
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(
         app_name="curation-curve",
-        cpus=cpus,
         extra_conf={"spark.driver.memory": "16g"},
     )
     spark.sparkContext.setLogLevel("ERROR")

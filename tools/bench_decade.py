@@ -74,7 +74,7 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             return -1
         return df.count()
-    spark = get_spark(app_name="bench_decade", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark(app_name="bench_decade")
     qs = {**entrymod.queries(), **entrymod.extra_queries()}
 
     out: dict[str, dict] = {}

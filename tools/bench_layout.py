@@ -60,8 +60,7 @@ def rowgroups_touched(path: str, lang: str) -> tuple[int, int]:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     work = sys.argv[2] if len(sys.argv) > 2 else "/tmp/bench_layout"
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
-    spark = get_spark(app_name="bench_layout", cpus=cpus)
+    spark = get_spark(app_name="bench_layout")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
 
