@@ -971,7 +971,6 @@ def stream_throughput(spark, sf_dir: str, violations: list[str] | None = None) -
                 out,
                 f"{ckpt}_sha",
                 ckpt,
-                n=5,
                 available_now=True,
                 compact_every=CUR_COMPACT_EVERY,
             )
@@ -995,7 +994,6 @@ def stream_throughput(spark, sf_dir: str, violations: list[str] | None = None) -
                 out,
                 f"{ckpt}_sha",
                 ckpt,
-                n=5,
                 available_now=True,
                 near_dup_threshold=0.5,
                 bands_dir=f"{ckpt}_bands",

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from pulsar_elasticsearch_sync_rs_spark.config import RewriteRule
 from pulsar_elasticsearch_sync_rs_spark.functions.topics import strip_partition_suffix
-from pulsar_elasticsearch_sync_rs_spark.functions.timestamps import date_str
 
 
 def _anchored(pattern: str) -> str:
@@ -70,8 +69,3 @@ def index_name(index_base: Column, ts_date_str: Column) -> Column:
     """P9 — ``index = rewrite(topic) + "-" + date_str`` (e.g.
     ``app-2021.03.12``; reference ``src/es.rs:332-334``)."""
     return F.concat_ws("-", index_base, ts_date_str)
-
-
-def index_for(topic: Column | str, ts: Column | str, rules: Iterable[RewriteRule] = ()) -> Column:
-    """Convenience: full routing column from raw topic + timestamp."""
-    return index_name(rewrite_index(topic, rules), date_str(ts))

@@ -161,29 +161,19 @@ def _gram_upper_bound(bench: DataFrame, n: int, text_col: str) -> int:
     return int(row["__n"])
 
 
-def _guarded(grams: DataFrame, max_broadcast_grams: int, keep_cached: bool = False):
+def _guarded(grams: DataFrame, max_broadcast_grams: int):
     """Apply the broadcast hint iff the measured gram count fits.
     Returns ``(possibly-hinted grams, n_grams)``.
 
-    ``keep_cached`` decides the cache lifetime in the broadcast
-    regime. The streaming lane passes ``True``: the gram set is probed
-    by EVERY micro-batch for the query's lifetime, so pinning the
-    counted result (≤ ``max_broadcast_grams`` short strings by
-    construction) is the point. Batch callers keep the default
-    ``False``: the cache is released right after the guard's count, so
-    a one-shot ``contamination_hits``/``decontaminate`` call leaks
-    nothing — the broadcast build re-runs the bench explode+distinct
-    once, a narrow job over the (by-definition-small-here) bench
-    table. In the fallback regime the cache is always dropped — a
-    too-big-to-broadcast set is too big to pin in memory too, and the
-    shuffle join recomputes it distributed."""
-    grams = grams.persist()
+    Nothing is cached, so a one-shot caller leaks nothing: the
+    broadcast build re-runs the bench explode+distinct once, a narrow
+    job over the (by-definition-small-here) bench table. Streaming
+    callers probe the set on every micro-batch, so they pass an eager
+    ``localCheckpoint`` of it, which both the count and every build
+    read instead of recomputing the plan."""
     n_grams = grams.count()
     if n_grams <= max_broadcast_grams:
-        if not keep_cached:
-            grams.unpersist()
         return F.broadcast(grams), n_grams
-    grams.unpersist()
     return grams, n_grams
 
 

@@ -20,13 +20,3 @@ def group_counts(df: DataFrame, *keys: str) -> DataFrame:
     """Count records per key tuple (G1 buffer sizes / G3 counters).
     Partial aggregation map-side; single shuffle on the keys."""
     return df.groupBy(*[F.col(k) for k in keys]).agg(F.count("*").alias("n_records"))
-
-
-def consumed_counters(df: DataFrame, topic: str = "topic", date: str = "date_str") -> DataFrame:
-    """G3 — the reference's consumed counters by topic and (topic, date)
-    (increments at ``src/pulsar.rs:260-262``), as one grouped count with
-    the date dimension."""
-    return (
-        df.groupBy(F.col(topic).alias("topic"), F.col(date).alias("date_str"))
-        .agg(F.count("*").alias("consumed"))
-    )

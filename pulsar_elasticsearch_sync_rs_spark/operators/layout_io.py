@@ -50,6 +50,14 @@ def join(path: str, *names: str) -> str:
     return os.path.join(path, *names)
 
 
+def hadoop_fs(spark, path: str):
+    """(FileSystem, Path) for any Hadoop-addressable URI. Driver-local
+    ``os.path`` reports hdfs://, s3a:// and other remote paths as
+    absent; every index and artifact state check goes through here."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def _jfs(path: str):
     """(jvm, FileSystem, Path-class, hadoopConf) for a remote path.
 
@@ -65,11 +73,8 @@ def _jfs(path: str):
             "SparkSession is active to host the FileSystem client - "
             "create the session first (no job is launched)"
         )
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(conf)
-    return jvm, fs, jpath, conf
+    fs, jpath = hadoop_fs(spark, path)
+    return spark._jvm, fs, jpath, spark._jsc.hadoopConfiguration()
 
 
 def exists(path: str) -> bool:
@@ -94,10 +99,6 @@ def list_names(path: str) -> list[str]:
         _, fs, jpath, _ = _jfs(path)
         return [s.getPath().getName() for s in fs.listStatus(jpath)]
     return os.listdir(path)
-
-
-def isdir_child(path: str, name: str) -> bool:
-    return isdir(join(path, name))
 
 
 def list_parquet_relpaths(path: str) -> list[str]:

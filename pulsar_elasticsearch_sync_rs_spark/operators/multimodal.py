@@ -28,18 +28,6 @@ from pyspark.sql import types as T
 
 from .skew import spread_scan
 
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("byte_len", T.LongType(), False),
-        T.StructField("sha", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-    ]
-)
-
 
 def attach_media_metadata(df: DataFrame, payload: str = "payload") -> DataFrame:
     """Narrow metadata derivation over a binary column: length + sha256.

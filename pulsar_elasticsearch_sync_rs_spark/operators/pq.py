@@ -47,6 +47,7 @@ from pulsar_elasticsearch_sync_rs_spark.operators.ivf import (
     bounded_training_sample,
     lloyd_kmeans,
 )
+from pulsar_elasticsearch_sync_rs_spark.operators.layout_io import hadoop_fs
 from pulsar_elasticsearch_sync_rs_spark.operators.similarity import cosine
 
 
@@ -989,15 +990,6 @@ def append_to_ivfpq_index(
     }
 
 
-def _hadoop_fs(spark, path: str):
-    """(FileSystem, Path) for any Hadoop-addressable URI (same helper
-    shape as streaming/curation.py — kept local to avoid an
-    operators→streaming import)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
 def _load_tombstone_ids(spark, root: str, id_col: str):
     """The distinct tombstoned ids of an IVF-PQ artifact generation, or
     None when no delete has ever been issued against it. Absent path is
@@ -1182,11 +1174,11 @@ def fold_ivfpq_tombstones(
         # them, so their stale directories go via the filesystem
         for c in cells:
             if c not in kept_cells:
-                fs, hp = _hadoop_fs(
+                fs, hp = hadoop_fs(
                     spark, posixpath.join(codes_path, f"cell_id={c}")
                 )
                 fs.delete(hp, True)
-    fs, hp = _hadoop_fs(spark, posixpath.join(root, "tombstones"))
+    fs, hp = hadoop_fs(spark, posixpath.join(root, "tombstones"))
     fs.delete(hp, True)
     return {
         "n_folded": int(n_folded),

@@ -40,16 +40,6 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 # --- vectorized kernels (the hot path) ----------------------------------
 
 def _cosine_np(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -73,13 +63,6 @@ cosine_udf = F.pandas_udf(_cosine_np, T.DoubleType())
 # the shared underlying UDF (measured — deriving from cosine_udf would
 # silently turn every knn lane nondeterministic too).
 cosine_once = F.pandas_udf(_cosine_np, T.DoubleType()).asNondeterministic()
-
-
-@F.pandas_udf(T.DoubleType())
-def dot_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    am = np.array(a.tolist(), dtype=np.float64)
-    bm = np.array(b.tolist(), dtype=np.float64)
-    return pd.Series(np.einsum("ij,ij->i", am, bm))
 
 
 def cosine(a: Column, b: Column) -> Column:

@@ -88,20 +88,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Load fixture parquet tables as a dict of DataFrames (TESTDATA.md)."""
-    names = names or (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

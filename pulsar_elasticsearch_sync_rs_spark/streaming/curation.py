@@ -17,7 +17,7 @@ broadcast guard), the min-id exact-dedup survivor rule of
 ``streaming/sink.py`` — into the shape a real ingest deployment runs.
 
 Cross-batch dedup state is the ACCUMULATED SHA INDEX — a Spark-native
-BUCKETED table (``bucketBy(n_buckets, sha)``, partitioned by
+BUCKETED table (``bucketBy(N_BUCKETS, sha)``, partitioned by
 ``batch``) at ``sha_dir``, the streaming twin of
 ``operators.dedup.persist_sha_index``: every admitted batch lands its
 (sha, doc_id) pairs as one ``batch=<id>`` partition written in bucket
@@ -56,13 +56,34 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.json_fns import json_literal
 from ..functions.text import shingles_from_tokens, ws_tokens
 from ..operators.decontaminate import (
     DEFAULT_MAX_BROADCAST_GRAMS,
     _guarded,
     bench_gram_set,
 )
+from ..operators.layout_io import hadoop_fs
 from ..sources.batch import parquet_schema
+
+# The fixed curation dataflow: every ingest runs with these values.
+GRAM_N = 5  # decontamination word n-gram length
+QUALITY_MIN = 0.65  # default gate: quality score floor
+DUP_WORD_MAX = 0.6  # default gate: duplicate-word fraction ceiling
+TOP_BIGRAM_MAX = 0.1  # default gate: top-bigram fraction ceiling
+RATE_KEY = "source"  # the column ``rate_limits`` caps per micro-batch
+ID_COL = "doc_id"
+TEXT_COL = "text"
+N_BUCKETS = 16  # bucket count of the sha and band indexes
+ND_NUM_HASHES = 32  # near-dup MinHash signature length
+ND_BANDS = 8  # near-dup LSH bands
+ND_SHINGLE_K = 3  # near-dup verify shingle length (exact Jaccard)
+ND_MAX_BUCKET = 1024  # near-dup band bucket size before hub degrade
+
+_SHA_COLS = ["sha", ID_COL]
+_SHA_DDL = f"sha STRING, {ID_COL} BIGINT"
+_BAND_COLS = ["band_id", "band_hash", ID_COL]
+_BAND_DDL = f"band_id INT, band_hash STRING, {ID_COL} BIGINT"
 
 
 def _run_overlapped(thunks) -> None:
@@ -115,18 +136,8 @@ def _bands_table_name(bands_dir: str) -> str:
     return "curation_bands_" + hashlib.md5(bands_dir.encode()).hexdigest()[:12]
 
 
-def _hadoop_fs(spark, path: str):
-    """(FileSystem, Path) for any Hadoop-addressable URI — the index
-    state checks must see hdfs://, s3a:// and file paths alike;
-    driver-local ``os.path`` silently reports remote paths as absent
-    (which here would mean "skip dedup, then clobber the history")."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
 def _dir_has_batches(spark, path: str) -> bool:
-    fs, hpath = _hadoop_fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return False
     return any(
@@ -139,14 +150,14 @@ _SPEC_FILE = "_BUCKET_SPEC"
 
 
 def _write_bucket_spec(spark, path: str, bucket_col: str, n_buckets: int) -> None:
-    fs, hpath = _hadoop_fs(spark, f"{path.rstrip('/')}/{_SPEC_FILE}")
+    fs, hpath = hadoop_fs(spark, f"{path.rstrip('/')}/{_SPEC_FILE}")
     out = fs.create(hpath, True)
     out.write(bytearray(f"{bucket_col}:{int(n_buckets)}".encode("utf-8")))
     out.close()
 
 
 def _read_bucket_spec(spark, path: str) -> tuple[str, int] | None:
-    fs, hpath = _hadoop_fs(spark, f"{path.rstrip('/')}/{_SPEC_FILE}")
+    fs, hpath = hadoop_fs(spark, f"{path.rstrip('/')}/{_SPEC_FILE}")
     if not fs.exists(hpath):
         return None
     jvm = spark._jvm
@@ -163,8 +174,8 @@ def _assert_catalog_entry_matches(
     spark, table: str, path: str, bucket_col: str, n_buckets: int
 ) -> None:
     """A catalog hit alone is not proof the registered table IS this
-    index: a caller-supplied ``sha_table``/``bands_table`` name reused
-    with a different directory or bucket count would silently read and
+    index: a table name bound to a different directory or bucket count
+    (say, by another job sharing the session) would silently read and
     write the WRONG table — bypassing the ``_BUCKET_SPEC`` sidecar
     guard entirely (the sidecar is only consulted on the
     re-registration path). Assert the catalog entry's location and
@@ -182,7 +193,7 @@ def _assert_catalog_entry_matches(
         r.col_name: (r.data_type or "")
         for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
     }
-    fs, hpath = _hadoop_fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     want_loc = str(fs.makeQualified(hpath)).rstrip("/")
     got_loc = rows.get("Location", "").rstrip("/")
     got_n = rows.get("Num Buckets", "")
@@ -198,7 +209,7 @@ def _assert_catalog_entry_matches(
             f"{got_n or '?'} BUCKETS but this job is configured for "
             f"location '{want_loc}' ({bucket_col}, {n_buckets}) - the "
             "table name is already taken by a different index; use a "
-            "distinct table name (or the original config)"
+            "different index directory, or drop the stale catalog entry"
         )
 
 
@@ -248,12 +259,6 @@ def _bucketed_table_ready(
     )
     spark.sql(f"MSCK REPAIR TABLE {table}")
     return True
-
-
-def _sha_table_ready(spark, sha_table: str, sha_dir: str, n_buckets: int) -> bool:
-    return _bucketed_table_ready(
-        spark, sha_table, sha_dir, n_buckets, "sha STRING, doc_id BIGINT", "sha"
-    )
 
 
 def prior_sha_anti_join(
@@ -309,8 +314,8 @@ def _write_sha_slice(
         batch_id,
         n_buckets,
         bucket_col="sha",
-        cols=["sha", "doc_id"],
-        ddl_cols="sha STRING, doc_id BIGINT",
+        cols=_SHA_COLS,
+        ddl_cols=_SHA_DDL,
         lineage_safe=lineage_safe,
     )
 
@@ -333,14 +338,13 @@ def _write_bucketed_slice(
     materialized first — which is also the correct failure order: the
     rows are fixed before the target partition is touched.
 
-    ``lineage_safe=True`` (round-14 curation_nd lift): the CALLER
-    vouches the frame's lineage is already truncated of any read of
-    ``table`` (e.g. it derives only from eager localCheckpoints) — the
-    defensive checkpoint is skipped, saving one Spark job per slice
-    per micro-batch. The explicit bucket-column repartition stays
-    either way: without it each upstream task writes its own set of
-    n_buckets bucket files (tasks × buckets tiny files per
-    partition)."""
+    ``lineage_safe=True``: the CALLER vouches the frame's lineage is
+    already truncated of any read of ``table`` (e.g. it derives only
+    from eager localCheckpoints) — the defensive checkpoint is
+    skipped, saving one Spark job per slice per micro-batch. The
+    explicit bucket-column repartition stays either way: without it
+    each upstream task writes its own set of n_buckets bucket files
+    (tasks × buckets tiny files per partition)."""
     spark = df.sparkSession
     if not _bucketed_table_ready(spark, table, path, n_buckets, ddl_cols, bucket_col):
         (
@@ -378,8 +382,8 @@ def _write_compact_state(spark, path: str, slot: int, watermark: int) -> None:
     half-state that parses; the (tiny) delete→rename window where the
     state is ABSENT degrades to the state-less defensive path below,
     which is lossless by construction."""
-    fs, dst = _hadoop_fs(spark, f"{path.rstrip('/')}/{_COMPACT_STATE}")
-    _, tmp = _hadoop_fs(spark, f"{path.rstrip('/')}/.{_COMPACT_STATE}.tmp")
+    fs, dst = hadoop_fs(spark, f"{path.rstrip('/')}/{_COMPACT_STATE}")
+    _, tmp = hadoop_fs(spark, f"{path.rstrip('/')}/.{_COMPACT_STATE}.tmp")
     out = fs.create(tmp, True)
     out.write(bytearray(f"{int(slot)}:{int(watermark)}".encode("utf-8")))
     out.close()
@@ -393,7 +397,7 @@ def _write_compact_state(spark, path: str, slot: int, watermark: int) -> None:
 def _read_compact_state(spark, path: str) -> tuple[int, int] | None:
     """(active_slot, watermark) or None — unparseable/absent both read
     as None (the defensive fold-everything path)."""
-    fs, hpath = _hadoop_fs(spark, f"{path.rstrip('/')}/{_COMPACT_STATE}")
+    fs, hpath = hadoop_fs(spark, f"{path.rstrip('/')}/{_COMPACT_STATE}")
     if not fs.exists(hpath):
         return None
     jvm = spark._jvm
@@ -413,7 +417,7 @@ def _list_partition_ids(spark, path: str) -> dict[int, object]:
     """{batch_id: hadoop Path} for every batch=<id> directory on the
     FILESYSTEM — the compactor's truth is the files (catalog entries
     are derived, and the in-memory catalog forgets across processes)."""
-    fs, root = _hadoop_fs(spark, path)
+    fs, root = hadoop_fs(spark, path)
     if not fs.exists(root):
         return {}
     out: dict[int, object] = {}
@@ -428,7 +432,7 @@ def _list_partition_ids(spark, path: str) -> dict[int, object]:
 
 
 def _count_part_files(spark, path: str, hpath) -> int:
-    fs, _ = _hadoop_fs(spark, path)
+    fs, _ = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return 0
     return sum(
@@ -444,7 +448,7 @@ def _drop_slice(spark, table: str, path: str, batch_id: int, hpath) -> None:
     metadata-only — without the physical delete an MSCK after a
     catalog loss would resurrect the folded rows)."""
     spark.sql(f"ALTER TABLE {table} DROP IF EXISTS PARTITION (batch={int(batch_id)})")
-    fs, _ = _hadoop_fs(spark, path)
+    fs, _ = hadoop_fs(spark, path)
     fs.delete(hpath, True)
 
 
@@ -455,16 +459,15 @@ def compact_index_batches(
     bucket_col: str,
     cols: list[str],
     ddl_cols: str,
-    table: str | None = None,
-    n_buckets: int = 16,
+    table: str,
     retain: int = 1,
     watermark: int | None = None,
 ) -> dict:
     """Fold closed ``batch=<id>`` partitions of a streaming bucketed
     index (the sha/bands indexes this module accumulates) into ONE
     consolidated slice, bounding partition count at ~(1 + retain) and
-    file count at ~``n_buckets`` per consolidated generation — without
-    this, every micro-batch adds a partition ×``n_buckets`` bucket
+    file count at ~``N_BUCKETS`` per consolidated generation — without
+    this, every micro-batch adds a partition ×``N_BUCKETS`` bucket
     files FOREVER (at a 5 s trigger, ~550k files/day across both
     indexes), and partition listing, MSCK re-registration after a
     restart, and scan planning all degrade with partition count long
@@ -519,8 +522,7 @@ def compact_index_batches(
     Returns a report dict: folded batch ids, previous/new slot, files
     folded vs slot files after, partitions before/after.
     """
-    table = table or _sha_table_name(path)
-    if not _bucketed_table_ready(spark, table, path, n_buckets, ddl_cols, bucket_col):
+    if not _bucketed_table_ready(spark, table, path, N_BUCKETS, ddl_cols, bucket_col):
         return {
             "folded_batches": [],
             "slot": None,
@@ -544,7 +546,7 @@ def compact_index_batches(
         # max(0, ...) on the SLICE BOUND too: retain > open-slice count
         # must fold NOTHING — a bare negative bound would wrap Python's
         # slice end-relative and fold the oldest slices the contract
-        # promises to keep (review finding, round 9)
+        # promises to keep
         keep = max(0, int(retain))
         closed_ids = open_ids[: max(0, len(open_ids) - keep)]
     else:
@@ -569,7 +571,7 @@ def compact_index_batches(
         spark.read.schema(schema)
         .parquet(*[str(p) for p in fold.values()])
         .select(*cols)
-        .repartition(n_buckets, bucket_col)
+        .repartition(N_BUCKETS, bucket_col)
     )
     view = f"{table}_fold"
     src.createOrReplaceTempView(view)
@@ -586,7 +588,7 @@ def compact_index_batches(
     for b, p in fold.items():
         _drop_slice(spark, table, path, b, p)
 
-    fs, root = _hadoop_fs(spark, path)
+    fs, root = hadoop_fs(spark, path)
     slot_path = spark._jvm.org.apache.hadoop.fs.Path(root, f"batch={new_slot}")
     return {
         "folded_batches": sorted(closed),
@@ -601,45 +603,32 @@ def compact_index_batches(
 
 
 def compact_sha_index(
-    spark,
-    sha_dir: str,
-    sha_table: str | None = None,
-    n_buckets: int = 16,
-    retain: int = 1,
-    watermark: int | None = None,
+    spark, sha_dir: str, retain: int = 1, watermark: int | None = None
 ) -> dict:
     """``compact_index_batches`` preset for the accumulated sha index."""
     return compact_index_batches(
         spark,
         sha_dir,
         bucket_col="sha",
-        cols=["sha", "doc_id"],
-        ddl_cols="sha STRING, doc_id BIGINT",
-        table=sha_table or _sha_table_name(sha_dir),
-        n_buckets=n_buckets,
+        cols=_SHA_COLS,
+        ddl_cols=_SHA_DDL,
+        table=_sha_table_name(sha_dir),
         retain=retain,
         watermark=watermark,
     )
 
 
 def compact_bands_index(
-    spark,
-    bands_dir: str,
-    bands_table: str | None = None,
-    n_buckets: int = 16,
-    id_col: str = "doc_id",
-    retain: int = 1,
-    watermark: int | None = None,
+    spark, bands_dir: str, retain: int = 1, watermark: int | None = None
 ) -> dict:
     """``compact_index_batches`` preset for the accumulated band index."""
     return compact_index_batches(
         spark,
         bands_dir,
         bucket_col="band_hash",
-        cols=["band_id", "band_hash", id_col],
-        ddl_cols=f"band_id INT, band_hash STRING, {id_col} BIGINT",
-        table=bands_table or _bands_table_name(bands_dir),
-        n_buckets=n_buckets,
+        cols=_BAND_COLS,
+        ddl_cols=_BAND_DDL,
+        table=_bands_table_name(bands_dir),
         retain=retain,
         watermark=watermark,
     )
@@ -652,35 +641,24 @@ def run_curation_ingest(
     sha_dir: str,
     checkpoint_dir: str,
     transport=None,
-    n: int = 5,
-    quality_min: float = 0.65,
-    dup_word_max: float = 0.6,
-    top_bigram_max: float = 0.1,
     rate_limits: dict[str, int] | None = None,
-    rate_key: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_broadcast_grams: int = DEFAULT_MAX_BROADCAST_GRAMS,
     available_now: bool = False,
     registry=None,
-    sha_table: str | None = None,
-    n_buckets: int = 16,
     near_dup_threshold: float | None = None,
     bands_dir: str | None = None,
-    bands_table: str | None = None,
-    nd_num_hashes: int = 32,
-    nd_bands: int = 8,
-    nd_shingle_k: int = 3,
-    nd_max_bucket: int = 1024,
     compact_every: int | None = None,
     contamination_max_frac: float | None = None,
     gate_pred=None,
 ):
     """Start the curation ingestion stream; returns the StreamingQuery.
 
+    The dataflow is fixed: documents carry ``doc_id`` (``ID_COL``),
+    ``text`` (``TEXT_COL``), ``lang`` and ``source``, and the thresholds,
+    gram lengths and bucket counts are this module's constants.
+
     Per micro-batch, in production order:
-      1. GATE — quality ≥ ``quality_min`` AND repetition keep
-         (dup-word ≤ ``dup_word_max``, top-bigram ≤ ``top_bigram_max``);
+      1. GATE — quality ≥ ``QUALITY_MIN`` AND repetition keep
+         (dup-word ≤ ``DUP_WORD_MAX``, top-bigram ≤ ``TOP_BIGRAM_MAX``);
          narrow projections, no shuffle. ``gate_pred`` (opt-in)
          replaces the rule gate with ANY boolean Column over the batch
          columns — built for the LEARNED gate: a fitted
@@ -688,8 +666,8 @@ def run_curation_ingest(
          sigmoid expression (``lr_score(...) ≥ p_min`` distills the
          rule gate into a classifier the pipeline applies at zero
          Python cost per row; e2e-pinned stream ≡ batch).
-      2. DECONTAMINATE — drop docs sharing any word ``n``-gram with
-         ``bench``. The gram set is built, measured and (under the
+      2. DECONTAMINATE — drop docs sharing any word ``GRAM_N``-gram
+         with ``bench``. The gram set is built, measured and (under the
          guard threshold) broadcast-hinted ONCE at start — every batch
          pays one hash probe, never the guard's count job.
          ``contamination_max_frac`` (opt-in) switches to the FUZZY
@@ -698,7 +676,7 @@ def run_curation_ingest(
          13-gram-overlap style; operators/decontaminate
          .contamination_fraction semantics) — same broadcast probe,
          one extra per-doc count on the same exploded stream.
-      3. DEDUP — min-``id_col`` survivor per content sha within the
+      3. DEDUP — min-``doc_id`` survivor per content sha within the
          batch, then LEFT ANTI against the accumulated sha index.
          Only (sha, id) pairs shuffle.
       3b. NEAR-DUP (opt-in: ``near_dup_threshold`` + ``bands_dir``) —
@@ -711,17 +689,18 @@ def run_curation_ingest(
          ``bands_dir``; the unbounded history never re-signatures and
          never re-shuffles), history mega-buckets degrade to hub pairs
          (O(batch) rows), and every candidate is VERIFIED with exact
-         ``nd_shingle_k``-gram Jaccard ≥ ``near_dup_threshold`` before
+         ``ND_SHINGLE_K``-gram Jaccard ≥ ``near_dup_threshold`` before
          it drops anything — the first-arrival twin of
          ``dedup_minhash_verified``. Within a batch the min-id member
          of a verified pair survives; against history the arriving doc
          loses. History texts are read back from the accumulated
          ``out_dir`` corpus for the verify only (candidate-bounded
          semi-join — the corpus text never feeds the candidate join).
-      4. RATE LIMIT — optional per-``rate_key`` admission cap PER
-         MICRO-BATCH (``rate_limits[key]`` rows, lowest ``id_col``
-         first — deterministic). Flush-window granularity, same as the
-         reference's per-flush buffers (R1 note in ``runner.py``).
+      4. RATE LIMIT — optional per-``source`` admission cap PER
+         MICRO-BATCH (``rate_limits[source]`` rows, lowest ``doc_id``
+         first — deterministic; NULL and unconfigured sources pass).
+         Flush-window granularity, same as the reference's per-flush
+         buffers (R1 note in ``runner.py``).
       5. LAND — admitted docs overwrite ``out_dir/batch=<id>``; their
          (sha, id) pairs overwrite ``sha_dir/batch=<id>``; and, when a
          bulk ``transport`` is given, the batch is indexed with
@@ -729,8 +708,10 @@ def run_curation_ingest(
          (replay-safe; see EsBulkTransport.id_col).
 
     ``registry`` (optional) gets per-stage counters: curation_input /
-    _gated / _contaminated / _duplicate / _rate_dropped / _admitted —
-    opt-in because exact stage counts cost one extra pass per stage.
+    _gated / _contaminated / _duplicate / _rate_dropped / _admitted.
+    They ride Observation metrics on jobs the batch runs anyway, so
+    counting launches no Spark job; without a registry the batch skips
+    the observe nodes and the marker files.
     Counters are REPLAY-SAFE across in-process restarts (including the
     ``run_supervised`` composition, which rebuilds this closure per
     restart): a durable per-batch marker under
@@ -740,7 +721,8 @@ def run_curation_ingest(
     double-counted and a half-written batch contributes nothing until
     its successful attempt. (The marker lands atomically BEFORE the
     increments: a crash between the two under-counts that one batch,
-    the direction the never-double-count contract deliberately picks.) (A cross-process restart starts a fresh registry; the
+    the direction the never-double-count contract deliberately picks.)
+    (A cross-process restart starts a fresh registry; the
     markers then keep replayed batches out of the new registry too, so
     its counters cover exactly the batches committed on its watch.)
     Marker probing is a driver-local ``os.path`` check — the same
@@ -750,13 +732,12 @@ def run_curation_ingest(
     which is per-batch-overwrite idempotent regardless) spans driver
     relocations only if that disk does.
 
-    ``sha_table`` / ``n_buckets``: catalog name (default: derived from
-    ``sha_dir``) and bucket count of the accumulated sha index table;
-    ``bands_table`` likewise for the band index (default: derived from
-    ``bands_dir``). With near-dup on, the counter family gains
-    curation_near_duplicate and admitted docs additionally land their
-    band slice at ``bands_dir/batch=<id>`` (same static-partition
-    INSERT OVERWRITE idempotency as the sha slice).
+    The sha index is the catalog table ``_sha_table_name(sha_dir)``,
+    ``N_BUCKETS`` buckets; the band index likewise
+    ``_bands_table_name(bands_dir)``. With near-dup on, the counter
+    family gains curation_near_duplicate and admitted docs additionally
+    land their band slice at ``bands_dir/batch=<id>`` (same
+    static-partition INSERT OVERWRITE idempotency as the sha slice).
 
     ``compact_every`` (opt-in): every N-th micro-batch, fold the closed
     slices of the sha index (and the band index when near-dup is on)
@@ -799,30 +780,33 @@ def run_curation_ingest(
             "accumulated band index location)"
         )
 
+    # every micro-batch probes the gram set for the query's lifetime:
+    # an eager localCheckpoint pins it without a CacheManager entry
+    # (identical bench plans would share one entry, and nothing could
+    # safely unpersist it when the query ends); the ContextCleaner
+    # reclaims the blocks once the query's closure is gone
     grams, _ = _guarded(
-        bench_gram_set(bench, n, text_col), max_broadcast_grams, keep_cached=True
+        bench_gram_set(bench, GRAM_N, TEXT_COL).localCheckpoint(eager=True),
+        DEFAULT_MAX_BROADCAST_GRAMS,
     )
-    table = sha_table or _sha_table_name(sha_dir)
-    b_table = bands_table or (
-        _bands_table_name(bands_dir) if bands_dir is not None else None
-    )
-    band_ddl = f"band_id INT, band_hash STRING, {id_col} BIGINT"
+    table = _sha_table_name(sha_dir)
+    b_table = _bands_table_name(bands_dir) if bands_dir is not None else None
 
     marker_dir = os.path.join(checkpoint_dir, "counted")
     counted_batches: set[int] = set()  # fast path; markers are the truth
     if gate_pred is None:
-        # round 13: the default gate rides the one-pass Arrow signals
-        # kernel — value-identical to the quality_score ×
-        # repetition_signals expression forms (equality pinned in
-        # tests/test_text_fast.py), one text crossing instead of three
-        # interpreted HOF chains per doc
+        # the default gate rides the one-pass Arrow signals kernel —
+        # value-identical to the quality_score × repetition_signals
+        # expression forms (equality pinned in tests/test_text_fast.py),
+        # one text crossing instead of three interpreted HOF chains
+        # per doc
         from ..functions.text import text_signals_fast
 
-        sig = text_signals_fast(text_col)
+        sig = text_signals_fast(TEXT_COL)
         gate_pred = (
-            (sig["quality"] >= quality_min)
-            & (sig["dup_word_frac"] <= dup_word_max)
-            & (sig["top_bigram_frac"] <= top_bigram_max)
+            (sig["quality"] >= QUALITY_MIN)
+            & (sig["dup_word_frac"] <= DUP_WORD_MAX)
+            & (sig["top_bigram_frac"] <= TOP_BIGRAM_MAX)
         )
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -849,14 +833,13 @@ def run_curation_ingest(
             and not os.path.exists(marker)
         )
         # Counters ride OBSERVATION metrics on frames whose jobs the
-        # batch runs anyway (optimization round 16): the six per-batch
-        # .count() jobs (input, gated, hashed, deduped, near_deduped,
-        # admitted) are gone — each observe node fires during the
-        # cache-fill / checkpoint job that first executes its frame,
-        # and every observed frame is guaranteed a FULL first execution
-        # (no limit-pruned consumer touches them; the round-15 notes'
-        # double-execution pitfall is avoided because a cache/
-        # checkpoint fill materializes whole partitions exactly once).
+        # batch runs anyway, so counting costs no .count() job per
+        # stage: each observe node fires during the cache-fill /
+        # checkpoint job that first executes its frame, and every
+        # observed frame is guaranteed a FULL first execution (no
+        # limit-pruned consumer touches them, and a cache/checkpoint
+        # fill materializes whole partitions exactly once, so no
+        # metric double-counts a re-executed partition).
         from pyspark.sql import Observation
 
         obs: dict[str, Observation] = {}
@@ -877,13 +860,11 @@ def run_curation_ingest(
         # gated is consumed by TWO branches (the shingle/gram side of
         # the contamination probe and the anti-join probe side), and
         # hashed by two more (the dedup groupBy build and its probe) —
-        # uncached, the Arrow gate kernel ran up to 4× and the
+        # uncached, the Arrow gate kernel runs up to 4× and the
         # decontamination join 2× per micro-batch inside the one
-        # signature/admit job (optimization round 15 profile: the
-        # "signature" stage carried the whole chain; guide §4 — each
-        # re-execution re-crosses the batch text into Python). Two
-        # micro-batch-bounded caches pin each stage to one execution;
-        # released in the finally below.
+        # signature/admit job, and each re-execution re-crosses the
+        # batch text into Python. Two micro-batch-bounded caches pin
+        # each stage to one execution; released in the finally below.
         #
         # no_pushdown: without it Catalyst pushes the gate filter (and
         # the ArrowEvalPython kernel feeding it) BELOW the spread
@@ -901,8 +882,7 @@ def run_curation_ingest(
         # pre-measured gram set (broadcast probe under the guard).
         # Default = the any-hit rule; ``contamination_max_frac`` opts
         # into the CONTAINMENT-threshold rule (operators/decontaminate
-        # .contamination_fraction's semantics, composed into the
-        # streaming topology it was built for — round 10): a doc drops
+        # .contamination_fraction's semantics): a doc drops
         # when ≥ that fraction of its distinct grams is benchmark
         # material, tolerating incidental shared phrases while still
         # killing near-copies. Docs too short to shingle pass (both
@@ -911,18 +891,18 @@ def run_curation_ingest(
         # zip_with references the token array k+2 times (see
         # functions.text.kgrams_from_tokens)
         batch_grams = gated.select(
-            id_col, ws_tokens(text_col).alias("__toks")
+            ID_COL, ws_tokens(TEXT_COL).alias("__toks")
         ).select(
-            id_col, F.explode(shingles_from_tokens("__toks", n)).alias("g")
+            ID_COL, F.explode(shingles_from_tokens("__toks", GRAM_N)).alias("g")
         )
         if contamination_max_frac is None:
-            hit_ids = batch_grams.join(grams, "g").select(id_col).distinct()
+            hit_ids = batch_grams.join(grams, "g").select(ID_COL).distinct()
         else:
             per_doc = (
                 batch_grams.join(
                     grams.withColumn("__hit", F.lit(1)), "g", "left"
                 )
-                .groupBy(id_col)
+                .groupBy(ID_COL)
                 .agg(
                     F.count("*").alias("__n_grams"),
                     F.count("__hit").alias("__n_hit"),
@@ -931,30 +911,31 @@ def run_curation_ingest(
             hit_ids = per_doc.filter(
                 F.col("__n_hit").cast("double") / F.col("__n_grams")
                 >= F.lit(float(contamination_max_frac))
-            ).select(id_col)
-        clean = gated.join(hit_ids, id_col, "left_anti")
+            ).select(ID_COL)
+        clean = gated.join(hit_ids, ID_COL, "left_anti")
 
         # within-batch min-id survivor per sha — semi-join so text
         # never shuffles on the hash key
         hashed = _observed(
-            clean.withColumn("__sha", F.sha2(F.col(text_col), 256)), "hashed"
+            clean.withColumn("__sha", F.sha2(F.col(TEXT_COL), 256)), "hashed"
         ).persist()
         surv_ids = (
-            hashed.select("__sha", id_col)
+            hashed.select("__sha", ID_COL)
             .groupBy("__sha")
-            .agg(F.min(id_col).alias(id_col))
-            .select(id_col)
+            .agg(F.min(ID_COL).alias(ID_COL))
+            .select(ID_COL)
         )
-        deduped = hashed.join(surv_ids, id_col, "left_semi")
+        deduped = hashed.join(surv_ids, ID_COL, "left_semi")
 
         # cross-batch: anti-join the accumulated BUCKETED index — the
         # batch side repartitions to the bucket count (bounded, per-
         # batch cost); the unbounded history never re-shuffles.
-        # _sha_table_ready is filesystem-truth: a cross-process restart
-        # re-registers the surviving history instead of skipping dedup
-        if _sha_table_ready(spark, table, sha_dir, n_buckets):
+        # _bucketed_table_ready is filesystem-truth: a cross-process
+        # restart re-registers the surviving history instead of
+        # skipping dedup
+        if _bucketed_table_ready(spark, table, sha_dir, N_BUCKETS, _SHA_DDL, "sha"):
             deduped = prior_sha_anti_join(
-                spark, table, deduped, exclude_batch=batch_id, n_buckets=n_buckets
+                spark, table, deduped, exclude_batch=batch_id, n_buckets=N_BUCKETS
             )
 
         # 3b. near-dup (opt-in): LSH candidates within the batch AND
@@ -981,26 +962,26 @@ def run_curation_ingest(
             # drag through the band-table read
             bands_b = minhash_bands(
                 deduped,
-                text=text_col,
-                id_col=id_col,
-                num_hashes=nd_num_hashes,
-                bands=nd_bands,
-                shingle_k=nd_shingle_k,
+                text=TEXT_COL,
+                id_col=ID_COL,
+                num_hashes=ND_NUM_HASHES,
+                bands=ND_BANDS,
+                shingle_k=ND_SHINGLE_K,
             ).localCheckpoint(eager=True)
             new_t = deduped.select(
-                F.col(id_col).alias("__new"), F.col(text_col).alias("__ta")
+                F.col(ID_COL).alias("__new"), F.col(TEXT_COL).alias("__ta")
             )
 
             within = candidates_from_bands(
-                bands_b, id_col=id_col, max_bucket=nd_max_bucket
+                bands_b, id_col=ID_COL, max_bucket=ND_MAX_BUCKET
             )
-            # ONE verify pass for both candidate families (round-15
-            # profile): within-batch pairs and history pairs used to
-            # run separate jaccard-UDF joins — two ArrowEval stages
-            # plus their join scaffolding per micro-batch. Both reduce
-            # to the same shape, (candidate text pair → loser id), so
-            # they union BEFORE the UDF and one Arrow crossing
-            # verifies everything.
+            # ONE verify pass for both candidate families: separate
+            # jaccard-UDF joins for within-batch and history pairs
+            # would cost two ArrowEval stages plus their join
+            # scaffolding per micro-batch. Both reduce to the same
+            # shape, (candidate text pair → loser id), so they union
+            # BEFORE the UDF and one Arrow crossing verifies
+            # everything.
             within_pairs = (
                 within.join(
                     new_t.withColumnRenamed("__new", "id_a"), "id_a"
@@ -1015,29 +996,28 @@ def run_curation_ingest(
             verify_pairs = within_pairs
 
             if _bucketed_table_ready(
-                spark, b_table, bands_dir, n_buckets, band_ddl, "band_hash"
+                spark, b_table, bands_dir, N_BUCKETS, _BAND_DDL, "band_hash"
             ):
                 prior_b = (
                     spark.table(b_table)
                     .filter(F.col("batch") != batch_id)
-                    .select("band_id", "band_hash", id_col)
+                    .select(*_BAND_COLS)
                 )
                 # SHARED operator, roles kept: (new_id, old_id) pairs
                 # with the history mega-bucket hub degrade — the one
                 # degrade contract lives in cross_band_candidates.
-                # EAGER checkpoint of the skinny pair rows (round-15
-                # profile): cand_hist below feeds a BROADCAST build,
-                # and broadcast builds re-execute their whole subtree
-                # (no ReuseExchange across jobs — SKILL.md) — without
-                # the checkpoint the bucket join + distinct ran TWICE
-                # per micro-batch (once for the broadcast, once in the
-                # verify join).
+                # EAGER checkpoint of the skinny pair rows: cand_hist
+                # below feeds a BROADCAST build, and broadcast builds
+                # re-execute their whole subtree (no ReuseExchange
+                # across jobs) — without the checkpoint the bucket
+                # join + distinct would run TWICE per micro-batch
+                # (once for the broadcast, once in the verify join).
                 cross = (
                     cross_band_candidates(
-                        bands_b.repartition(n_buckets, "band_hash"),
+                        bands_b.repartition(N_BUCKETS, "band_hash"),
                         prior_b,
-                        id_col=id_col,
-                        max_bucket=nd_max_bucket,
+                        id_col=ID_COL,
+                        max_bucket=ND_MAX_BUCKET,
                         keep_roles=True,
                     )
                     .withColumnRenamed("new_id", "__new")
@@ -1079,8 +1059,8 @@ def run_curation_ingest(
                         _read_history(spark, out_dir)
                         .filter(F.col("batch") != batch_id)
                         .select(
-                            F.col(id_col).alias("__hist"),
-                            F.col(text_col).alias("__tb"),
+                            F.col(ID_COL).alias("__hist"),
+                            F.col(TEXT_COL).alias("__tb"),
                         )
                     )
                     if len(cand_ids) <= _HIST_ISIN_MAX:
@@ -1099,23 +1079,26 @@ def run_curation_ingest(
                     )
                     verify_pairs = verify_pairs.unionByName(cross_pairs)
 
-            jac = make_jaccard_verify_udf(nd_shingle_k)
+            jac = make_jaccard_verify_udf(ND_SHINGLE_K)
             losers = verify_pairs.filter(
                 jac("__ta", "__tb") >= near_dup_threshold
-            ).select(F.col("__loser").alias(id_col))
+            ).select(F.col("__loser").alias(ID_COL))
 
             near_deduped = deduped.join(
-                losers.distinct(), id_col, "left_anti"
+                losers.distinct(), ID_COL, "left_anti"
             )
         else:
             near_deduped = deduped
 
         if rate_limits:
             near_deduped = _observed(near_deduped, "near")
-            w = Window.partitionBy(rate_key).orderBy(F.col(id_col).asc())
-            cap = F.lit(None).cast("int")
-            for k, v in rate_limits.items():
-                cap = F.when(F.col(rate_key) == k, F.lit(v)).otherwise(cap)
+            w = Window.partitionBy(RATE_KEY).orderBy(F.col(ID_COL).asc())
+            # one folded map literal; NULL and unconfigured sources
+            # look up NULL and pass
+            cap = F.element_at(
+                json_literal(rate_limits, "map<string,int>"),
+                F.col(RATE_KEY).cast("string"),
+            )
             admitted = (
                 near_deduped.withColumn("__rn", F.row_number().over(w))
                 .withColumn("__cap", cap)
@@ -1126,7 +1109,7 @@ def run_curation_ingest(
             admitted = near_deduped
 
         # admitted feeds ≥2 writes (+ counters). EAGER localCheckpoint,
-        # not persist (round-14 profile): the checkpoint both pays the
+        # not persist: the checkpoint both pays the
         # chain exactly once AND truncates the lineage of every
         # downstream write — the slice INSERTs below no longer carry a
         # logical read of their own target table, so their defensive
@@ -1141,8 +1124,7 @@ def run_curation_ingest(
                 # every value below is an Observation read — the
                 # metrics fired during the batch's own cache-fill/
                 # checkpoint jobs, so the whole counter block
-                # launches ZERO Spark jobs (optimization round 16;
-                # was six .count() jobs per counted batch)
+                # launches ZERO Spark jobs
                 counts["curation_input"] = _obs_n("input")
                 counts["curation_gated"] = counts["curation_input"] - _obs_n("gated")
                 # hashed is row-identical to clean (withColumn
@@ -1178,27 +1160,24 @@ def run_curation_ingest(
 
             def _land_sha():
                 _write_sha_slice(
-                    admitted.select(
-                        F.col("__sha").alias("sha"),
-                        F.col(id_col).alias("doc_id"),
-                    ),
+                    admitted.select(F.col("__sha").alias("sha"), ID_COL),
                     table,
                     sha_dir,
                     batch_id,
-                    n_buckets,
+                    N_BUCKETS,
                     lineage_safe=True,  # admitted is checkpoint-rooted
                 )
 
             def _land_bands():
                 _write_bucketed_slice(
-                    bands_b.join(admitted.select(id_col), id_col, "left_semi"),
+                    bands_b.join(admitted.select(ID_COL), ID_COL, "left_semi"),
                     b_table,
                     bands_dir,
                     batch_id,
-                    n_buckets,
+                    N_BUCKETS,
                     bucket_col="band_hash",
-                    cols=["band_id", "band_hash", id_col],
-                    ddl_cols=band_ddl,
+                    cols=_BAND_COLS,
+                    ddl_cols=_BAND_DDL,
                     # both sides are eager checkpoints — no read of
                     # the bands table survives in this lineage
                     lineage_safe=True,
@@ -1213,7 +1192,7 @@ def run_curation_ingest(
                     F.concat(
                         F.lit("docs-"), F.coalesce(F.col("lang"), F.lit("unknown"))
                     ).alias("index"),
-                    F.struct(id_col, "lang", "source").alias("doc"),
+                    F.struct(ID_COL, "lang", "source").alias("doc"),
                     F.col("__sha").alias("sha"),
                 )
                 transport.write(indexed, batch_id)
@@ -1245,8 +1224,6 @@ def run_curation_ingest(
             hashed.unpersist()
             if near_dup_threshold is not None:
                 deduped.unpersist()
-            # batch_df is no longer persisted: the input counter rides
-            # an Observation instead of a persist+count (round 16)
 
         # maintenance point: this batch is fully landed and no other
         # reader of the indexes can be in flight (foreachBatch is
@@ -1255,21 +1232,9 @@ def run_curation_ingest(
             # the sha and band compactions are independent (distinct
             # tables, paths, state files) — overlap them like the land
             # writes above
-            compactions = [
-                lambda: compact_sha_index(
-                    spark, sha_dir, sha_table=table, n_buckets=n_buckets
-                )
-            ]
+            compactions = [lambda: compact_sha_index(spark, sha_dir)]
             if near_dup_threshold is not None:
-                compactions.append(
-                    lambda: compact_bands_index(
-                        spark,
-                        bands_dir,
-                        bands_table=b_table,
-                        n_buckets=n_buckets,
-                        id_col=id_col,
-                    )
-                )
+                compactions.append(lambda: compact_bands_index(spark, bands_dir))
             _run_overlapped(compactions)
 
     writer = stream_docs.writeStream.foreachBatch(ingest_batch).option(

@@ -42,10 +42,12 @@ def decontaminate_stream(
     Returns the StreamingQuery. Checkpointed foreachBatch ⇒
     at-least-once into the parquet sink; the filter itself is
     deterministic, so replays rewrite identical rows."""
-    # keep_cached: the gram set is probed by every micro-batch for the
-    # query's lifetime — the one caller the guard's cache exists for
+    # every micro-batch probes the gram set for the query's lifetime:
+    # an eager localCheckpoint pins it without a CacheManager entry,
+    # and the ContextCleaner reclaims it once the query is gone
     grams, _ = _guarded(
-        bench_gram_set(bench, n, text_col), max_broadcast_grams, keep_cached=True
+        bench_gram_set(bench, n, text_col).localCheckpoint(eager=True),
+        max_broadcast_grams,
     )
 
     def clean_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -237,7 +237,6 @@ def test_curation_ingest_feeds_block_aligned_layout(spark, sf_dir, tmp_path):
         out_dir,
         str(tmp_path / "sha"),
         str(tmp_path / "ckpt"),
-        n=5,
         available_now=True,
     )
     q.awaitTermination(300)

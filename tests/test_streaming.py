@@ -1603,7 +1603,6 @@ def test_curation_ingest_stream_matches_batch_pipeline(spark, sf_dir, tmpdir):
         sha_dir,
         os.path.join(tmpdir, "cur_ckpt"),
         transport=IdempotentParquetBulkTransport(sink_dir),
-        n=5,
         available_now=True,
         registry=registry,
     )
@@ -1765,7 +1764,6 @@ def test_supervised_curation_ingest_survives_sink_failure(spark, sf_dir, tmpdir)
             sha_dir,
             os.path.join(tmpdir, "sc_ckpt"),
             transport=OneShotFailingTransport(),
-            n=5,
             available_now=True,
             registry=registry,
         )
@@ -2103,7 +2101,6 @@ def test_supervised_curation_soak_chaos(spark, sf_dir, tmpdir):
             os.path.join(tmpdir, "soak_sha"),
             os.path.join(tmpdir, "soak_ckpt"),
             transport=ChaosTransport(),
-            n=5,
             available_now=True,
             registry=registry,
         )
@@ -2205,7 +2202,7 @@ def test_curation_sha_index_survives_catalog_loss(spark, sf_dir, tmpdir):
             .parquet(src_dir)
         )
         q = run_curation_ingest(
-            stream, bench, out_dir, sha_dir, ckpt, n=5, available_now=True
+            stream, bench, out_dir, sha_dir, ckpt, available_now=True
         )
         q.awaitTermination(300)
 
@@ -2484,7 +2481,7 @@ def test_curation_ingest_compact_every_keeps_results_and_bounds_partitions(
             .parquet(src)
         )
         q = run_curation_ingest(
-            stream, bench, out_dir, sha_dir, ckpt, n=5,
+            stream, bench, out_dir, sha_dir, ckpt,
             available_now=True, compact_every=compact_every,
         )
         q.awaitTermination(300)
@@ -2649,7 +2646,6 @@ def test_curation_ingest_near_dup_against_accumulated_bands(spark, sf_dir, tmpdi
             out,
             os.path.join(tmpdir, f"{tag}_sha"),
             os.path.join(tmpdir, f"{tag}_ckpt"),
-            n=5,
             available_now=True,
             **kw,
         )
@@ -2694,6 +2690,91 @@ def test_curation_ingest_near_dup_against_accumulated_bands(spark, sf_dir, tmpdi
     assert donor["doc_id"] in band_ids
     assert not ({x1, x2, x3} & band_ids)
     assert band_ids <= on
+
+
+def test_curation_near_dup_history_fallback_matches_isin(
+    spark, sf_dir, tmpdir, monkeypatch
+):
+    """The history verify pushes up to ``_HIST_ISIN_MAX`` candidate ids
+    into the corpus scan as an In-filter; above that it semi-joins a
+    broadcast of the ids. Both must admit the same docs and count the
+    same. Runs the near-dup test's fixture as it is: each near-dup
+    ingest it starts is first replayed into sibling directories with
+    ``_HIST_ISIN_MAX = 0``, which sends every non-empty candidate set
+    down the broadcast branch."""
+    import pulsar_elasticsearch_sync_rs_spark.streaming.curation as cur
+
+    real = cur.run_curation_ingest
+    runs = []
+
+    def both_paths(stream, bench, out, sha_dir, ckpt, **kw):
+        if kw.get("near_dup_threshold") is None:
+            return real(stream, bench, out, sha_dir, ckpt, **kw)
+        fb_kw = {
+            **kw, "bands_dir": kw["bands_dir"] + "_fb", "registry": MetricsRegistry()
+        }
+        with monkeypatch.context() as m:
+            m.setattr(cur, "_HIST_ISIN_MAX", 0)
+            q = real(
+                stream, bench, out + "_fb", sha_dir + "_fb", ckpt + "_fb", **fb_kw
+            )
+            q.awaitTermination(300)
+            assert q.exception() is None
+        runs.append((out, kw["registry"], out + "_fb", fb_kw["registry"]))
+        return real(stream, bench, out, sha_dir, ckpt, **kw)
+
+    monkeypatch.setattr(cur, "run_curation_ingest", both_paths)
+    test_curation_ingest_near_dup_against_accumulated_bands(spark, sf_dir, tmpdir)
+
+    assert len(runs) == 1
+    out, reg, fb_out, fb_reg = runs[0]
+    ids = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
+    fb_ids = sorted(r["doc_id"] for r in spark.read.parquet(fb_out).collect())
+    assert fb_ids == ids
+    keys = (
+        "curation_input", "curation_gated", "curation_contaminated",
+        "curation_duplicate", "curation_near_duplicate",
+        "curation_rate_dropped", "curation_admitted",
+    )
+    counts = {k: reg.get(k) for k in keys}
+    assert {k: fb_reg.get(k) for k in keys} == counts
+    # the batch-1 plant can only drop against history, so both verify
+    # paths really ran (the fixture asserts it is not admitted)
+    assert counts["curation_near_duplicate"] >= 3
+
+
+def test_curation_ingest_leaves_no_cached_gram_set(spark, sf_dir, tmpdir):
+    """The bench gram set every micro-batch probes is pinned by an eager
+    localCheckpoint, not a CacheManager entry: once the query ends, an
+    identical gram-set plan finds nothing cached. (A persisted set stays
+    cached for the session's life, shared by every identical plan, so
+    no query could safely unpersist it.)"""
+    from pyspark import StorageLevel
+
+    from pulsar_elasticsearch_sync_rs_spark.operators.decontaminate import (
+        bench_gram_set,
+    )
+    from pulsar_elasticsearch_sync_rs_spark.sources.batch import read_table
+    from pulsar_elasticsearch_sync_rs_spark.streaming.curation import (
+        run_curation_ingest,
+    )
+
+    docs = read_table(spark, sf_dir, "documents")
+    bench = docs.filter(F.col("doc_id") % 97 == 0)
+    src = os.path.join(tmpdir, "src")
+    docs.orderBy("doc_id").limit(60).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    q = run_curation_ingest(
+        stream,
+        bench,
+        os.path.join(tmpdir, "out"),
+        os.path.join(tmpdir, "sha"),
+        os.path.join(tmpdir, "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    assert bench_gram_set(bench, 5, "text").storageLevel == StorageLevel.NONE
 
 
 def test_compact_soak_50_batches_bounded_and_flat(spark, sf_dir, tmpdir):
@@ -2867,7 +2948,6 @@ def test_curation_ingest_fuzzy_decontamination_matches_batch(spark, sf_dir, tmpd
         out_dir,
         os.path.join(tmpdir, "fz_sha"),
         os.path.join(tmpdir, "fz_ckpt"),
-        n=5,
         available_now=True,
         contamination_max_frac=0.5,
     )
@@ -2962,7 +3042,6 @@ def test_curation_ingest_learned_gate_matches_batch(spark, sf_dir, tmpdir):
         out_dir,
         os.path.join(tmpdir, "lg_sha"),
         os.path.join(tmpdir, "lg_ckpt"),
-        n=5,
         available_now=True,
         gate_pred=gate,
     )

@@ -147,7 +147,6 @@ def main() -> None:
                     .parquet(src)
                 )
                 kwargs = dict(
-                    n=5,
                     available_now=True,
                     compact_every=1,
                 )
