@@ -168,13 +168,35 @@ def _guarded(grams: DataFrame, max_broadcast_grams: int):
     Nothing is cached, so a one-shot caller leaks nothing: the
     broadcast build re-runs the bench explode+distinct once, a narrow
     job over the (by-definition-small-here) bench table. Streaming
-    callers probe the set on every micro-batch, so they pass an eager
-    ``localCheckpoint`` of it, which both the count and every build
-    read instead of recomputing the plan."""
+    callers probe the set on every micro-batch; they guard the stored
+    copy :func:`stored_gram_set` reads back instead."""
     n_grams = grams.count()
     if n_grams <= max_broadcast_grams:
         return F.broadcast(grams), n_grams
     return grams, n_grams
+
+
+def stored_gram_set(
+    bench: DataFrame,
+    n: int,
+    text_col: str,
+    path: str,
+    max_broadcast_grams: int = DEFAULT_MAX_BROADCAST_GRAMS,
+) -> DataFrame:
+    """The guarded bench gram set of a streaming query, which probes it
+    on every micro-batch for its whole life: written once as parquet at
+    ``path`` (overwritten at each start) and read back, so each batch's
+    broadcast build or shuffle join scans those files instead of
+    re-running the bench explode+distinct. Files rather than a cache or
+    a ``localCheckpoint``: a cache is a CacheManager entry that
+    identical plans share, so no query can safely unpersist it, and
+    checkpoint blocks live on executors only, so losing one executor
+    would fail every later micro-batch. The files stay at ``path``
+    after the query ends; they are the size of the deduped set."""
+    grams = bench_gram_set(bench, n, text_col)
+    grams.write.mode("overwrite").parquet(path)
+    stored = bench.sparkSession.read.schema(grams.schema).parquet(path)
+    return _guarded(stored, max_broadcast_grams)[0]
 
 
 def _guarded_two_tier(

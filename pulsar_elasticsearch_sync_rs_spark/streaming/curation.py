@@ -51,6 +51,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -58,11 +59,7 @@ from pyspark.sql.window import Window
 
 from ..functions.json_fns import json_literal
 from ..functions.text import shingles_from_tokens, ws_tokens
-from ..operators.decontaminate import (
-    DEFAULT_MAX_BROADCAST_GRAMS,
-    _guarded,
-    bench_gram_set,
-)
+from ..operators.decontaminate import stored_gram_set
 from ..operators.layout_io import hadoop_fs
 from ..sources.batch import parquet_schema
 
@@ -80,10 +77,34 @@ ND_BANDS = 8  # near-dup LSH bands
 ND_SHINGLE_K = 3  # near-dup verify shingle length (exact Jaccard)
 ND_MAX_BUCKET = 1024  # near-dup band bucket size before hub degrade
 
-_SHA_COLS = ["sha", ID_COL]
-_SHA_DDL = f"sha STRING, {ID_COL} BIGINT"
-_BAND_COLS = ["band_id", "band_hash", ID_COL]
-_BAND_DDL = f"band_id INT, band_hash STRING, {ID_COL} BIGINT"
+
+class _Index(NamedTuple):
+    """The fixed layout of one accumulated bucketed index: every slice
+    write, re-registration and compaction of it reads this one spec."""
+
+    prefix: str  # catalog table name = prefix + md5(directory)[:12]
+    bucket_col: str
+    cols: tuple[str, ...]
+    ddl: str
+
+    def table(self, path: str) -> str:
+        """Deterministic catalog name for the index rooted at ``path``
+        — bucket metadata lives in the metastore, so the index must be
+        a named table; deriving the name from the path keeps concurrent
+        jobs with distinct state dirs from colliding, and the ingest
+        job and the compactor from targeting different entries."""
+        return self.prefix + hashlib.md5(path.encode()).hexdigest()[:12]
+
+
+_SHA = _Index(
+    "curation_sha_", "sha", ("sha", ID_COL), f"sha STRING, {ID_COL} BIGINT"
+)
+_BANDS = _Index(
+    "curation_bands_",
+    "band_hash",
+    ("band_id", "band_hash", ID_COL),
+    f"band_id INT, band_hash STRING, {ID_COL} BIGINT",
+)
 
 
 def _run_overlapped(thunks) -> None:
@@ -122,18 +143,8 @@ def _read_history(spark, out_dir: str) -> DataFrame:
 
 
 def _sha_table_name(sha_dir: str) -> str:
-    """Deterministic catalog name for the bucketed sha index rooted at
-    ``sha_dir`` — bucket metadata lives in the metastore, so the index
-    must be a named table; deriving the name from the path keeps
-    concurrent jobs with distinct state dirs from colliding."""
-    return "curation_sha_" + hashlib.md5(sha_dir.encode()).hexdigest()[:12]
-
-
-def _bands_table_name(bands_dir: str) -> str:
-    """The band-index twin of :func:`_sha_table_name` — ONE derivation
-    shared by the ingest job and the compactor; divergent copies would
-    make compaction silently target a different catalog entry."""
-    return "curation_bands_" + hashlib.md5(bands_dir.encode()).hexdigest()[:12]
+    """Catalog name of the sha index rooted at ``sha_dir``."""
+    return _SHA.table(sha_dir)
 
 
 def _dir_has_batches(spark, path: str) -> bool:
@@ -308,27 +319,17 @@ def _write_sha_slice(
     files instead of appending duplicates, preserving the module's
     idempotency contract under the bucketed layout."""
     _write_bucketed_slice(
-        pairs,
-        sha_table,
-        sha_dir,
-        batch_id,
-        n_buckets,
-        bucket_col="sha",
-        cols=_SHA_COLS,
-        ddl_cols=_SHA_DDL,
-        lineage_safe=lineage_safe,
+        pairs, _SHA, sha_table, sha_dir, batch_id, n_buckets, lineage_safe
     )
 
 
 def _write_bucketed_slice(
     df: DataFrame,
+    index: _Index,
     table: str,
     path: str,
     batch_id: int,
     n_buckets: int,
-    bucket_col: str,
-    cols: list[str],
-    ddl_cols: str,
     lineage_safe: bool = False,
 ) -> None:
     """Shared write path of the per-batch bucketed indexes (sha,
@@ -346,7 +347,8 @@ def _write_bucketed_slice(
     each upstream task writes its own set of n_buckets bucket files
     (tasks × buckets tiny files per partition)."""
     spark = df.sparkSession
-    if not _bucketed_table_ready(spark, table, path, n_buckets, ddl_cols, bucket_col):
+    bucket_col, cols = index.bucket_col, index.cols
+    if not _bucketed_table_ready(spark, table, path, n_buckets, index.ddl, bucket_col):
         (
             df.select(*cols, F.lit(batch_id).cast("int").alias("batch"))
             .repartition(n_buckets, bucket_col)
@@ -452,17 +454,7 @@ def _drop_slice(spark, table: str, path: str, batch_id: int, hpath) -> None:
     fs.delete(hpath, True)
 
 
-def compact_index_batches(
-    spark,
-    path: str,
-    *,
-    bucket_col: str,
-    cols: list[str],
-    ddl_cols: str,
-    table: str,
-    retain: int = 1,
-    watermark: int | None = None,
-) -> dict:
+def compact_index_batches(spark, path: str, index: _Index, retain: int = 1) -> dict:
     """Fold closed ``batch=<id>`` partitions of a streaming bucketed
     index (the sha/bands indexes this module accumulates) into ONE
     consolidated slice, bounding partition count at ~(1 + retain) and
@@ -513,16 +505,17 @@ def compact_index_batches(
     sequential foreachBatch) or while the stream is stopped. ``retain``
     newest batch slices present are never touched — whatever their
     ids, so the rule survives batch-id restarts — keeping the one
-    batch a checkpointed restart can replay overwritable; an explicit
-    ``watermark`` overrides that (``retain=0`` / ``watermark=max`` are
-    for stopped streams only). A reader planned BEFORE a fold commits
-    may list files the delete phase removes — within the single-writer
-    foreachBatch envelope that reader ordering cannot happen.
+    batch a checkpointed restart can replay overwritable (``retain=0``
+    folds everything: stopped streams only). A reader planned BEFORE a
+    fold commits may list files the delete phase removes — within the
+    single-writer foreachBatch envelope that reader ordering cannot
+    happen.
 
     Returns a report dict: folded batch ids, previous/new slot, files
     folded vs slot files after, partitions before/after.
     """
-    if not _bucketed_table_ready(spark, table, path, N_BUCKETS, ddl_cols, bucket_col):
+    table, bucket_col, cols = index.table(path), index.bucket_col, index.cols
+    if not _bucketed_table_ready(spark, table, path, N_BUCKETS, index.ddl, bucket_col):
         return {
             "folded_batches": [],
             "slot": None,
@@ -542,15 +535,12 @@ def compact_index_batches(
     # any crash leftovers (never deleted unread — see docstring)
     sources = {b: present[b] for b in present if b < 0}
     open_ids = sorted(b for b in present if b >= 0)
-    if watermark is None:
-        # max(0, ...) on the SLICE BOUND too: retain > open-slice count
-        # must fold NOTHING — a bare negative bound would wrap Python's
-        # slice end-relative and fold the oldest slices the contract
-        # promises to keep
-        keep = max(0, int(retain))
-        closed_ids = open_ids[: max(0, len(open_ids) - keep)]
-    else:
-        closed_ids = [b for b in open_ids if b <= int(watermark)]
+    # max(0, ...) on the SLICE BOUND too: retain > open-slice count must
+    # fold NOTHING — a bare negative bound would wrap Python's slice
+    # end-relative and fold the oldest slices the contract promises to
+    # keep
+    keep = max(0, int(retain))
+    closed_ids = open_ids[: max(0, len(open_ids) - keep)]
     closed = {b: present[b] for b in closed_ids}
     if not closed and len(sources) <= 1:
         return {
@@ -602,36 +592,15 @@ def compact_index_batches(
     }
 
 
-def compact_sha_index(
-    spark, sha_dir: str, retain: int = 1, watermark: int | None = None
-) -> dict:
-    """``compact_index_batches`` preset for the accumulated sha index."""
-    return compact_index_batches(
-        spark,
-        sha_dir,
-        bucket_col="sha",
-        cols=_SHA_COLS,
-        ddl_cols=_SHA_DDL,
-        table=_sha_table_name(sha_dir),
-        retain=retain,
-        watermark=watermark,
-    )
+def compact_sha_index(spark, sha_dir: str, retain: int = 1) -> dict:
+    """``compact_index_batches`` of the accumulated sha index."""
+    return compact_index_batches(spark, sha_dir, _SHA, retain)
 
 
-def compact_bands_index(
-    spark, bands_dir: str, retain: int = 1, watermark: int | None = None
-) -> dict:
-    """``compact_index_batches`` preset for the accumulated band index."""
-    return compact_index_batches(
-        spark,
-        bands_dir,
-        bucket_col="band_hash",
-        cols=_BAND_COLS,
-        ddl_cols=_BAND_DDL,
-        table=_bands_table_name(bands_dir),
-        retain=retain,
-        watermark=watermark,
-    )
+def compact_bands_index(spark, bands_dir: str) -> dict:
+    """``compact_index_batches`` of the accumulated band index, newest
+    slice kept open (the ``compact_every`` hook's rule)."""
+    return compact_index_batches(spark, bands_dir, _BANDS)
 
 
 def run_curation_ingest(
@@ -667,9 +636,10 @@ def run_curation_ingest(
          rule gate into a classifier the pipeline applies at zero
          Python cost per row; e2e-pinned stream ≡ batch).
       2. DECONTAMINATE — drop docs sharing any word ``GRAM_N``-gram
-         with ``bench``. The gram set is built, measured and (under the
-         guard threshold) broadcast-hinted ONCE at start — every batch
-         pays one hash probe, never the guard's count job.
+         with ``bench``. The gram set is built, stored under
+         ``checkpoint_dir/bench_grams``, measured and (under the guard
+         threshold) broadcast-hinted ONCE at start — every batch pays
+         one hash probe, never the guard's count job.
          ``contamination_max_frac`` (opt-in) switches to the FUZZY
          containment rule: drop only when ≥ that fraction of the doc's
          distinct grams is benchmark material (the data-card
@@ -732,9 +702,9 @@ def run_curation_ingest(
     which is per-batch-overwrite idempotent regardless) spans driver
     relocations only if that disk does.
 
-    The sha index is the catalog table ``_sha_table_name(sha_dir)``,
+    The sha index is the catalog table ``_SHA.table(sha_dir)``,
     ``N_BUCKETS`` buckets; the band index likewise
-    ``_bands_table_name(bands_dir)``. With near-dup on, the counter
+    ``_BANDS.table(bands_dir)``. With near-dup on, the counter
     family gains curation_near_duplicate and admitted docs additionally
     land their band slice at ``bands_dir/batch=<id>`` (same
     static-partition INSERT OVERWRITE idempotency as the sha slice).
@@ -780,17 +750,13 @@ def run_curation_ingest(
             "accumulated band index location)"
         )
 
-    # every micro-batch probes the gram set for the query's lifetime:
-    # an eager localCheckpoint pins it without a CacheManager entry
-    # (identical bench plans would share one entry, and nothing could
-    # safely unpersist it when the query ends); the ContextCleaner
-    # reclaims the blocks once the query's closure is gone
-    grams, _ = _guarded(
-        bench_gram_set(bench, GRAM_N, TEXT_COL).localCheckpoint(eager=True),
-        DEFAULT_MAX_BROADCAST_GRAMS,
+    # every micro-batch probes the gram set for the query's lifetime;
+    # it is stored as files under the checkpoint (see stored_gram_set)
+    grams = stored_gram_set(
+        bench, GRAM_N, TEXT_COL, os.path.join(checkpoint_dir, "bench_grams")
     )
-    table = _sha_table_name(sha_dir)
-    b_table = _bands_table_name(bands_dir) if bands_dir is not None else None
+    table = _SHA.table(sha_dir)
+    b_table = _BANDS.table(bands_dir) if bands_dir is not None else None
 
     marker_dir = os.path.join(checkpoint_dir, "counted")
     counted_batches: set[int] = set()  # fast path; markers are the truth
@@ -933,7 +899,9 @@ def run_curation_ingest(
         # _bucketed_table_ready is filesystem-truth: a cross-process
         # restart re-registers the surviving history instead of
         # skipping dedup
-        if _bucketed_table_ready(spark, table, sha_dir, N_BUCKETS, _SHA_DDL, "sha"):
+        if _bucketed_table_ready(
+            spark, table, sha_dir, N_BUCKETS, _SHA.ddl, _SHA.bucket_col
+        ):
             deduped = prior_sha_anti_join(
                 spark, table, deduped, exclude_batch=batch_id, n_buckets=N_BUCKETS
             )
@@ -996,12 +964,12 @@ def run_curation_ingest(
             verify_pairs = within_pairs
 
             if _bucketed_table_ready(
-                spark, b_table, bands_dir, N_BUCKETS, _BAND_DDL, "band_hash"
+                spark, b_table, bands_dir, N_BUCKETS, _BANDS.ddl, _BANDS.bucket_col
             ):
                 prior_b = (
                     spark.table(b_table)
                     .filter(F.col("batch") != batch_id)
-                    .select(*_BAND_COLS)
+                    .select(*_BANDS.cols)
                 )
                 # SHARED operator, roles kept: (new_id, old_id) pairs
                 # with the history mega-bucket hub degrade — the one
@@ -1094,9 +1062,12 @@ def run_curation_ingest(
             near_deduped = _observed(near_deduped, "near")
             w = Window.partitionBy(RATE_KEY).orderBy(F.col(ID_COL).asc())
             # one folded map literal; NULL and unconfigured sources
-            # look up NULL and pass
+            # look up NULL and pass. int(): from_json turns the WHOLE
+            # map NULL (every source uncapped) if one value is a float
             cap = F.element_at(
-                json_literal(rate_limits, "map<string,int>"),
+                json_literal(
+                    {k: int(v) for k, v in rate_limits.items()}, "map<string,int>"
+                ),
                 F.col(RATE_KEY).cast("string"),
             )
             admitted = (
@@ -1171,13 +1142,11 @@ def run_curation_ingest(
             def _land_bands():
                 _write_bucketed_slice(
                     bands_b.join(admitted.select(ID_COL), ID_COL, "left_semi"),
+                    _BANDS,
                     b_table,
                     bands_dir,
                     batch_id,
                     N_BUCKETS,
-                    bucket_col="band_hash",
-                    cols=_BAND_COLS,
-                    ddl_cols=_BAND_DDL,
                     # both sides are eager checkpoints — no read of
                     # the bands table survives in this lineage
                     lineage_safe=True,

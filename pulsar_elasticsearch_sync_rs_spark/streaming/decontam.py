@@ -20,10 +20,9 @@ from pyspark.sql import functions as F
 
 from ..operators.decontaminate import (
     DEFAULT_MAX_BROADCAST_GRAMS,
-    _guarded,
-    bench_gram_set,
+    _exploded_grams,
+    stored_gram_set,
 )
-from ..operators.decontaminate import _exploded_grams
 
 
 def decontaminate_stream(
@@ -42,11 +41,11 @@ def decontaminate_stream(
     Returns the StreamingQuery. Checkpointed foreachBatch ⇒
     at-least-once into the parquet sink; the filter itself is
     deterministic, so replays rewrite identical rows."""
-    # every micro-batch probes the gram set for the query's lifetime:
-    # an eager localCheckpoint pins it without a CacheManager entry,
-    # and the ContextCleaner reclaims it once the query is gone
-    grams, _ = _guarded(
-        bench_gram_set(bench, n, text_col).localCheckpoint(eager=True),
+    grams = stored_gram_set(
+        bench,
+        n,
+        text_col,
+        f"{checkpoint_dir.rstrip('/')}/bench_grams",
         max_broadcast_grams,
     )
 

@@ -2501,11 +2501,11 @@ def test_curation_ingest_compact_every_keeps_results_and_bounds_partitions(
 
 def test_bucketed_index_table_name_collision_is_loud(spark, tmpdir):
     """A catalog HIT alone is not proof the registered table IS this
-    index: a caller-supplied sha_table/bands_table name reused with a
-    different directory or bucket count must fail loudly instead of
-    silently reading/writing the WRONG table (the _BUCKET_SPEC sidecar
-    only guards the re-registration path; this pins the catalog-hit
-    path)."""
+    index: a table name already bound (say, by another job sharing the
+    session) to a different directory or bucket count must fail loudly
+    instead of silently reading/writing the WRONG table (the
+    _BUCKET_SPEC sidecar only guards the re-registration path; this
+    pins the catalog-hit path)."""
     from pulsar_elasticsearch_sync_rs_spark.streaming.curation import (
         _bucketed_table_ready,
     )
@@ -2543,7 +2543,9 @@ def test_bucketed_index_table_name_collision_is_loud(spark, tmpdir):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_curation_ingest_near_dup_against_accumulated_bands(spark, sf_dir, tmpdir):
+def test_curation_ingest_near_dup_against_accumulated_bands(
+    spark, sf_dir, tmpdir, monkeypatch
+):
     """Opt-in MinHash near-dup dedup-on-arrival: within a batch the
     min-id member of a verified near-dup group survives; across
     batches an arriving perturbed copy of an already-ingested doc is
@@ -2552,7 +2554,10 @@ def test_curation_ingest_near_dup_against_accumulated_bands(spark, sf_dir, tmpdi
     (J >> threshold, different sha - invisible to exact dedup, proven
     by the near-dup-OFF baseline run admitting all of them), counters
     gain the near_duplicate bucket and still tie out, and admitted
-    docs land their band slice per batch."""
+    docs land their band slice per batch. The run is repeated with
+    ``_HIST_ISIN_MAX = 0``, which sends the history candidate ids down
+    the broadcast-semi-join branch instead of the In-filter: it must
+    admit and count the same."""
     import time
 
     from pulsar_elasticsearch_sync_rs_spark.functions.text import (
@@ -2560,6 +2565,7 @@ def test_curation_ingest_near_dup_against_accumulated_bands(spark, sf_dir, tmpdi
         repetition_signals,
     )
     from pulsar_elasticsearch_sync_rs_spark.sources.batch import read_table
+    from pulsar_elasticsearch_sync_rs_spark.streaming import curation
     from pulsar_elasticsearch_sync_rs_spark.streaming.curation import (
         run_curation_ingest,
     )
@@ -2657,98 +2663,51 @@ def test_curation_ingest_near_dup_against_accumulated_bands(spark, sf_dir, tmpdi
     assert {x1, x2, x3} <= off, "plants blocked before the near-dup stage"
     assert donor["doc_id"] in off
 
-    registry = MetricsRegistry()
-    bands_dir = os.path.join(tmpdir, "ndon_bands")
-    on = run(
-        "ndon",
-        near_dup_threshold=0.5,
-        bands_dir=bands_dir,
-        registry=registry,
-    )
-    # donor (min id of the within-batch group) survives; both batch-0
-    # perturbations drop within-batch; the batch-1 perturbation drops
-    # against the ACCUMULATED band index
-    assert donor["doc_id"] in on
-    assert not ({x1, x2, x3} & on), "planted near-dup admitted"
-    assert on <= off
-    # every extra drop is near-dup-verified by construction; counters
-    # tie out with the new bucket and count at least the three plants
-    n_in = registry.get("curation_input")
-    assert registry.get("curation_near_duplicate") >= 3
-    assert n_in == sum(
-        registry.get(k)
-        for k in (
-            "curation_admitted", "curation_gated", "curation_contaminated",
-            "curation_duplicate", "curation_near_duplicate",
-            "curation_rate_dropped",
-        )
-    )
-    # band slices: one per batch, admitted ids only (no dropped plant)
-    batches = {d for d in os.listdir(bands_dir) if d.startswith("batch=")}
-    assert batches == {"batch=0", "batch=1"}, batches
-    band_ids = {r["doc_id"] for r in spark.read.parquet(bands_dir).collect()}
-    assert donor["doc_id"] in band_ids
-    assert not ({x1, x2, x3} & band_ids)
-    assert band_ids <= on
-
-
-def test_curation_near_dup_history_fallback_matches_isin(
-    spark, sf_dir, tmpdir, monkeypatch
-):
-    """The history verify pushes up to ``_HIST_ISIN_MAX`` candidate ids
-    into the corpus scan as an In-filter; above that it semi-joins a
-    broadcast of the ids. Both must admit the same docs and count the
-    same. Runs the near-dup test's fixture as it is: each near-dup
-    ingest it starts is first replayed into sibling directories with
-    ``_HIST_ISIN_MAX = 0``, which sends every non-empty candidate set
-    down the broadcast branch."""
-    import pulsar_elasticsearch_sync_rs_spark.streaming.curation as cur
-
-    real = cur.run_curation_ingest
-    runs = []
-
-    def both_paths(stream, bench, out, sha_dir, ckpt, **kw):
-        if kw.get("near_dup_threshold") is None:
-            return real(stream, bench, out, sha_dir, ckpt, **kw)
-        fb_kw = {
-            **kw, "bands_dir": kw["bands_dir"] + "_fb", "registry": MetricsRegistry()
-        }
-        with monkeypatch.context() as m:
-            m.setattr(cur, "_HIST_ISIN_MAX", 0)
-            q = real(
-                stream, bench, out + "_fb", sha_dir + "_fb", ckpt + "_fb", **fb_kw
-            )
-            q.awaitTermination(300)
-            assert q.exception() is None
-        runs.append((out, kw["registry"], out + "_fb", fb_kw["registry"]))
-        return real(stream, bench, out, sha_dir, ckpt, **kw)
-
-    monkeypatch.setattr(cur, "run_curation_ingest", both_paths)
-    test_curation_ingest_near_dup_against_accumulated_bands(spark, sf_dir, tmpdir)
-
-    assert len(runs) == 1
-    out, reg, fb_out, fb_reg = runs[0]
-    ids = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
-    fb_ids = sorted(r["doc_id"] for r in spark.read.parquet(fb_out).collect())
-    assert fb_ids == ids
     keys = (
-        "curation_input", "curation_gated", "curation_contaminated",
+        "curation_admitted", "curation_gated", "curation_contaminated",
         "curation_duplicate", "curation_near_duplicate",
-        "curation_rate_dropped", "curation_admitted",
+        "curation_rate_dropped",
     )
-    counts = {k: reg.get(k) for k in keys}
-    assert {k: fb_reg.get(k) for k in keys} == counts
-    # the batch-1 plant can only drop against history, so both verify
-    # paths really ran (the fixture asserts it is not admitted)
-    assert counts["curation_near_duplicate"] >= 3
+    results = []
+    for tag, isin_max in (("ndon", curation._HIST_ISIN_MAX), ("ndfb", 0)):
+        monkeypatch.setattr(curation, "_HIST_ISIN_MAX", isin_max)
+        registry = MetricsRegistry()
+        bands_dir = os.path.join(tmpdir, f"{tag}_bands")
+        on = run(
+            tag,
+            near_dup_threshold=0.5,
+            bands_dir=bands_dir,
+            registry=registry,
+        )
+        # donor (min id of the within-batch group) survives; both
+        # batch-0 perturbations drop within-batch; the batch-1
+        # perturbation drops against the ACCUMULATED band index
+        assert donor["doc_id"] in on
+        assert not ({x1, x2, x3} & on), "planted near-dup admitted"
+        assert on <= off
+        # every extra drop is near-dup-verified by construction;
+        # counters tie out with the new bucket and count at least the
+        # three plants
+        counts = {k: registry.get(k) for k in keys}
+        assert counts["curation_near_duplicate"] >= 3
+        assert registry.get("curation_input") == sum(counts.values())
+        # band slices: one per batch, admitted ids only (no dropped plant)
+        batches = {d for d in os.listdir(bands_dir) if d.startswith("batch=")}
+        assert batches == {"batch=0", "batch=1"}, batches
+        band_ids = {r["doc_id"] for r in spark.read.parquet(bands_dir).collect()}
+        assert donor["doc_id"] in band_ids
+        assert not ({x1, x2, x3} & band_ids)
+        assert band_ids <= on
+        results.append((on, counts))
+    assert results[1] == results[0]
 
 
 def test_curation_ingest_leaves_no_cached_gram_set(spark, sf_dir, tmpdir):
-    """The bench gram set every micro-batch probes is pinned by an eager
-    localCheckpoint, not a CacheManager entry: once the query ends, an
-    identical gram-set plan finds nothing cached. (A persisted set stays
-    cached for the session's life, shared by every identical plan, so
-    no query could safely unpersist it.)"""
+    """The bench gram set every micro-batch probes is stored as files
+    under the checkpoint, not as a CacheManager entry: once the query
+    ends, an identical gram-set plan finds nothing cached. (A persisted
+    set stays cached for the session's life, shared by every identical
+    plan, so no query could safely unpersist it.)"""
     from pyspark import StorageLevel
 
     from pulsar_elasticsearch_sync_rs_spark.operators.decontaminate import (
